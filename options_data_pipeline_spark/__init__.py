@@ -14,7 +14,7 @@ Layout
                    salted join, connected components, text stats,
                    multimodal binary kernels)
 - ``sinks``      : keyed-upsert / insert-if-absent sinks (MERGE emulation,
-                   dynamic partition overwrite)
+                   partition-scoped swaps, commit record)
 - ``streaming``  : Structured Streaming jobs (dedup ingest, foreachBatch
                    lookback-recompute MERGE, applyInPandasWithState)
 - ``jobs``       : batch lifecycles (watermark sync, gap repair, backfill,

@@ -17,10 +17,18 @@ Reference semantics:
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 EIGHT_HOURS = "INTERVAL 8 HOURS"
+
+
+def utc_now() -> datetime:
+    """The current UTC time as a naive datetime: the jobs' default
+    ``now``, in the same convention as the naive-UTC watermarks."""
+    return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
 def ms_to_timestamp(col: Column) -> Column:

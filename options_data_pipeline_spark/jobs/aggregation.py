@@ -48,9 +48,11 @@ def daily_sessions_job(
     Resumes AT the last processed session start (not after it): that
     session may have been aggregated while still partial, and re-reading
     its full span converges it — the T2 lookback semantic. Returns
-    {"sessions", "inserted", "updated"}.
+    {"sessions", "inserted", "updated"}; ``sessions`` is inserted +
+    updated, counted during the MERGE's write, and a run with no session
+    in scope commits nothing.
     """
-    now = now or datetime.utcnow()
+    now = now or T.utc_now()
     wm = high_watermark(spark, target_path, "datetime")
     start = wm if wm is not None else (now - cold_start)
     in_scope = hourly.where(F.col(time_col) >= F.lit(start))
@@ -61,14 +63,11 @@ def daily_sessions_job(
         time_col=time_col,
         min_rows=min_rows,
     ).withColumnRenamed("session_start", "datetime")
-    n = sessions.count()
-    if n == 0:
-        return {"sessions": 0, "inserted": 0, "updated": 0}
     m = merge_upsert(
         spark, target_path, sessions, keys=[*keys, "datetime"],
         audit_col="updated_at",
     )
-    return {"sessions": n, **m}
+    return {"sessions": m["inserted"] + m["updated"], **m}
 
 
 def option_ohlc_stats(spark: SparkSession, target_path: str) -> dict:
@@ -103,19 +102,17 @@ def option_ohlc_job(
     like the reference's before/after row-count diff
     (option_ohlc.py:156-175).
     """
-    now = now or datetime.utcnow()
+    now = now or T.utc_now()
     before = option_ohlc_stats(spark, target_path)
     cutoff = now - timedelta(hours=hours_back)
     window = trades.where(F.col("timestamp") >= F.lit(cutoff))
     agg = option_ohlc_hourly(window)
-    n = agg.count()
-    if n:
-        merge_upsert(
-            spark, target_path, agg, keys=["hour_timestamp", "instrument_name"]
-        )
+    m = merge_upsert(
+        spark, target_path, agg, keys=["hour_timestamp", "instrument_name"]
+    )
     after = option_ohlc_stats(spark, target_path)
     return {
-        "aggregated_rows": n,
+        "aggregated_rows": m["inserted"] + m["updated"],
         "before": before,
         "after": after,
         "new_records": after["total_records"] - before["total_records"],
@@ -139,7 +136,7 @@ def _chained_sessions_job(
     reference chains granularities through the stored daily output,
     weekly_sessions.py:84-166). Same resume-at-watermark convergence as
     the daily job."""
-    now = now or datetime.utcnow()
+    now = now or T.utc_now()
     wm = high_watermark(spark, target_path, "datetime")
     start = wm if wm is not None else (now - cold_start)
     in_scope = daily.where(F.col("datetime") >= F.lit(start))
@@ -151,14 +148,11 @@ def _chained_sessions_job(
         min_rows=min_rows,
     )
     sessions = sessions.drop("datetime").withColumnRenamed("session_start", "datetime")
-    n = sessions.count()
-    if n == 0:
-        return {"sessions": 0, "inserted": 0, "updated": 0}
     m = merge_upsert(
         spark, target_path, sessions, keys=["instrument", "datetime"],
         audit_col="updated_at",
     )
-    return {"sessions": n, **m}
+    return {"sessions": m["inserted"] + m["updated"], **m}
 
 
 def weekly_sessions_job(

@@ -81,30 +81,26 @@ def session_ohlc(
         .where(F.col("__n") >= F.lit(min_rows))
     )
 
+    # every derived column in ONE projection: a chain of withColumn calls
+    # re-analyses the growing plan once per column
     o, h, l, c = F.col("open"), F.col("high"), F.col("low"), F.col("close")
     chhigh, chlow = pct_change(o, h), pct_change(o, l)
-    return (
-        agg.withColumn("move", h - l)
-        .withColumn("chhigh", chhigh)
-        .withColumn("chlow", chlow)
-        .withColumn("chclose", pct_change(o, c))
-        .withColumn(
-            "chmax",
-            F.when(F.abs(F.col("chhigh")) > F.abs(F.col("chlow")), F.col("chhigh"))
-            .otherwise(F.col("chlow")),
+    hi_first = F.col("chhightime") < F.col("chlowtime")
+    lo_first = F.col("chlowtime") < F.col("chhightime")
+    return agg.select(
+        *[col for col in agg.columns if col != "__n"],
+        (h - l).alias("move"),
+        chhigh.alias("chhigh"),
+        chlow.alias("chlow"),
+        pct_change(o, c).alias("chclose"),
+        F.when(F.abs(chhigh) > F.abs(chlow), chhigh).otherwise(chlow).alias("chmax"),
+        F.when(hi_first, F.lit("HIGH"))
+        .when(lo_first, F.lit("LOW"))
+        .otherwise(
+            F.when(F.abs(chhigh) >= F.abs(chlow), F.lit("HIGH")).otherwise(F.lit("LOW"))
         )
-        .withColumn(
-            "firstextremumtype",
-            F.when(F.col("chhightime") < F.col("chlowtime"), F.lit("HIGH"))
-            .when(F.col("chlowtime") < F.col("chhightime"), F.lit("LOW"))
-            .otherwise(
-                F.when(
-                    F.abs(F.col("chhigh")) >= F.abs(F.col("chlow")), F.lit("HIGH")
-                ).otherwise(F.lit("LOW"))
-            ),
-        )
-        .withColumn("n_rows", F.col("__n"))
-        .drop("__n")
+        .alias("firstextremumtype"),
+        F.col("__n").alias("n_rows"),
     )
 
 

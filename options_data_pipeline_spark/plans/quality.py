@@ -5131,7 +5131,6 @@ def q_bloom_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged,
             keys=["day", "word"],
             partition_col="day",
-            collect_metrics=False,
         )
 
         # probe the MAINTAINED index with the shared probe matrix and

@@ -797,9 +797,9 @@ def af_stream_candles_replay_twin(
     """Per-trigger apply path of the candles replay twin (VERDICT r12
     #2): stage the source, seed gold with the leading time slice
     through the REAL apply, then audit the exact lazy rebuild frame a
-    trailing slice's trigger runs — touched-bucket checkpoint, literal
-    range predicate into the source scan, broadcast semi-join, OHLC
-    rollup."""
+    trailing slice's trigger runs — the batch's hour range as a literal
+    range predicate into the source scan, broadcast semi-join on the
+    batch's (instrument, hour) buckets, OHLC rollup."""
     from ..streaming.candles import (
         candles_apply_batch,
         candles_rebuild_frame,
@@ -815,5 +815,5 @@ def af_stream_candles_replay_twin(
     return {
         "apply_rebuild": candles_rebuild_frame(
             spark, src, staged.where(F.col("ts") >= t1)
-        )
+        )[0]
     }

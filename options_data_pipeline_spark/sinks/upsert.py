@@ -5,28 +5,33 @@ The reference engine's sinks are all keyed upserts into PostgreSQL
 src/pipeline/collectors/binance.py:76-125, deribit.py:83-137,
 aggregators/base.py:155-238). On a lakehouse the idiomatic equivalent is
 Delta `MERGE INTO`; this container ships vanilla Spark, so the same
-semantics are implemented as **latest-wins union + atomic directory
-swap**:
+semantics are implemented by one merge core (:func:`_merge`) behind
+:func:`merge_upsert` and :func:`upsert_partitioned`:
 
-1. read current target (if any),
-2. anti-join style reconciliation: updates win over existing rows on the
-   key; within the updates batch, the last row per key wins
-   (deterministic via a priority + monotonic batch order),
-3. write the merged table to ``<target>.staging-<uuid>``, then atomically
-   rename over the old directory — readers never observe a half-written
-   table, and reruns converge (T5 idempotence, SURVEY §2.9).
+1. read the target — only the partitions the batch touches when the
+   table is partitioned on a column derived from the key, else all of
+   it — with the schema from the commit record, so no inference job runs;
+2. reconcile with one aggregate over batch ∪ target grouped on the key
+   (a single shuffle): updates win over existing rows, and within the
+   batch the last row per key wins (deterministic via a priority +
+   monotonic batch order);
+3. write the merged slice to ``<target>.staging-<uuid>`` in one job that
+   also counts inserted/updated rows and takes the max of every
+   timestamp/date key column (an ``Observation``), then rename it into
+   place — the whole directory, or each touched partition directory;
+4. write the commit record (:mod:`.commit`) last.  Readers see the old
+   table or the new one, and reruns converge (T5 idempotence, SURVEY
+   §2.9).
 
 Metrics mirror the reference's inserted/updated counters (binance.py
 RETURNING xmax trick): *inserted* = update keys absent from the target,
-*updated* = update keys already present. Counting is one aggregate over
-the join, not a per-row loop.
+*updated* = update keys already present.
 
-At scale: this rewrites the whole table, which is exactly what it should
-NOT do at 100 TB — there, the target is date-partitioned and
-``upsert_partitioned`` rewrites only the partitions present in the
-updates batch (dynamic partition overwrite), keeping the write
-proportional to the incremental slice (SURVEY §2.9 T2 lookback windows
-are hours-to-days, so the touched-partition set stays tiny).
+Cost: :func:`upsert_partitioned` rewrites the touched partitions, so a
+micro-batch over a date-partitioned table costs O(batch), not O(table)
+(SURVEY §2.9 T2 lookback windows are hours-to-days, so the touched set
+stays tiny).  :func:`merge_upsert` rewrites the whole table; it is for
+small tables (the daily sessions) and one-shot builds.
 """
 
 from __future__ import annotations
@@ -35,8 +40,11 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from . import commit
 
 
 # Characters Spark escapes in partition directory names (Hive
@@ -46,6 +54,9 @@ from pyspark.sql import functions as F
 _PATH_ESCAPE_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
 
 _PENDING_DROPS = "_pending_drops.json"
+
+# Key columns whose max the commit record keeps (the watermark columns).
+_TIME_TYPES = ("timestamp", "timestamp_ntz", "date")
 
 
 def _escape_partition_value(spark: SparkSession, value) -> str:
@@ -116,18 +127,20 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
     every other row, destructive for sinks whose contract includes
     retraction (apply_cdc). ADVICE r3.
 
-    Reads with ``mergeSchema=true`` (ADVICE r9): additive schema
-    evolution rewrites only TOUCHED partitions with the new column, so
-    default sampled-footer inference can miss it on a later whole-table
-    read — which would make the ``'_bid' in target.columns`` replay
-    probe silently disable replay protection for stores migrated from
-    pre-``_bid`` layouts.  Merging unions every footer's schema instead.
-    Cost is per-footer metadata only (these stores keep O(days) small
-    files); on a real cluster the table format (Delta/Iceberg) owns the
-    schema and this option is moot."""
+    A current commit record (:mod:`.commit`) supplies the schema, so the
+    read runs no schema-inference job.  Otherwise the read falls back to
+    ``mergeSchema=true`` (ADVICE r9): additive schema evolution rewrites
+    only TOUCHED partitions with the new column, so default sampled-footer
+    inference can miss it on a later whole-table read — which would make
+    the ``'_bid' in target.columns`` replay probe silently disable replay
+    protection for stores migrated from pre-``_bid`` layouts.  Merging
+    unions every footer's schema instead."""
     if not os.path.exists(path):
         return None
     _complete_pending_drops(path)
+    rec = commit.read_record(path)
+    if rec is not None:
+        return spark.read.schema(rec["schema"]).parquet(path)
     try:
         return spark.read.option("mergeSchema", "true").parquet(path)
     except Exception as exc:
@@ -142,23 +155,8 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def _atomic_replace(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Write ``df`` to a staging dir, then swap it into place.
-
-    A local-FS rename is atomic; on object stores the same pattern runs
-    through a metastore/table-format commit (Delta/Iceberg), which is the
-    production path this emulates.
-    """
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    """Write ``df`` to a staging dir, then swap it into place."""
+    commit.swap_in(commit.stage(df, path, partition_by), path)
 
 
 def dedupe_last_wins(
@@ -186,6 +184,130 @@ def dedupe_last_wins(
     )
 
 
+def _merge(
+    spark: SparkSession,
+    target_path: str,
+    updates: DataFrame,
+    keys: list[str],
+    partition_by: list[str] | None = None,
+    scoped: bool = False,
+    touched: list | None = None,
+    audit_col: str | None = None,
+    order_by: list[str] | None = None,
+) -> dict[str, int]:
+    """The merge core behind :func:`merge_upsert` and
+    :func:`upsert_partitioned`: one shuffle and one write job per call.
+
+    With ``scoped`` (one partition column) only the partitions the batch
+    touches are read, merged and swapped in; ``touched`` lists them when
+    the caller already knows them (a superset is fine — the write
+    verifies it), otherwise one aggregate over the batch finds them.  A
+    first write, or a table laid out another way, is rewritten whole.
+
+    One aggregate over (batch ∪ target rows) grouped on the keys
+    reconciles them in a single shuffle: per key, ``max_by`` keeps the
+    row with the highest (from-batch, ``order_by``..., batch position) —
+    updates win over stored rows and the last batch row wins within the
+    batch, as :func:`dedupe_last_wins` orders them.  The inserted/updated
+    counts and the max of every timestamp/date key column ride the write
+    through an ``Observation``.  A batch that changes no row is a no-op
+    commit.  The commit record goes last."""
+    partition_by = list(partition_by or [])
+    raw = updates
+    if audit_col:
+        updates = updates.withColumn(audit_col, F.current_timestamp())
+    current = _read_target(spark, target_path)
+    rec = commit.read_record(target_path) if current is not None else None
+    part = partition_by[0] if scoped else None
+    hinted = touched is not None
+    if current is not None and scoped and commit.partition_columns(target_path, rec) == [part]:
+        # the token of the files just read: the new record's token builds on it
+        base = rec["token"] if rec else commit.snapshot(target_path)
+        if not hinted:
+            touched = [r[0] for r in updates.select(part).distinct().collect()]
+        current = current.where(F.col(part).isin(touched))
+    else:
+        scoped = False
+
+    # Column expressions are built sparingly: each costs the Python side a
+    # few JVM round trips, which at micro-batch size rival a Spark job
+    cols = updates.columns
+    types = dict(updates.dtypes)
+    rest = [c for c in cols if c not in keys]
+
+    def tagged(df: DataFrame, from_batch: bool) -> DataFrame:
+        pos = F.monotonically_increasing_id() if from_batch else F.lit(-1).cast("long")
+        order = [F.col(c).alias(f"o{j}") for j, c in enumerate(order_by or [])]
+        return df.select(
+            *keys,
+            F.struct(*rest).alias("_v"),
+            F.struct(F.lit(from_batch).alias("u"), *order, pos.alias("i")).alias("_p"),
+        )
+
+    rows = tagged(updates, True)
+    if current is not None:
+        # additive schema evolution: a column the batch carries but the
+        # stored table predates (audit stamps, the sketch store's per-day
+        # _bid replay marker) surfaces as NULL on surviving rows — the
+        # same contract Delta's mergeSchema gives
+        have = dict(current.dtypes)
+        stored = current.select(*[
+            c if have.get(c) == types[c]
+            else (F.col(c) if c in have else F.lit(None)).cast(types[c]).alias(c)
+            for c in cols
+        ])
+        rows = rows.unionByName(tagged(stored, False))
+    merged = rows.groupBy(*keys).agg(
+        F.max_by("_v", "_p").alias("_v"),
+        F.max("_p.u").alias("_u"),
+        (~F.min("_p.u")).alias("_c"),
+    ).select(*keys, "_v.*", "_u", "_c").select(*cols, "_u", "_c")
+    from_u, in_c = F.col("_u"), F.col("_c")
+    times = [n for n in keys if types[n] in _TIME_TYPES]
+    probes = [
+        F.sum((from_u & in_c).cast("long")).alias("updated"),
+        F.sum((from_u & ~in_c).cast("long")).alias("inserted"),
+        *[F.max(t).alias(f"max{i}") for i, t in enumerate(times)],
+    ]
+    if scoped:
+        probes.append(
+            F.sum((from_u & ~F.col(part).isin(touched)).cast("long")).alias("outside")
+        )
+    obs = Observation()
+    out = merged.observe(obs, *probes).drop("_u", "_c")
+    staging = commit.stage(out, target_path, partition_by)
+    got = obs.get
+    counts = {"inserted": int(got["inserted"] or 0), "updated": int(got["updated"] or 0)}
+    if scoped and got["outside"]:
+        # the batch reaches partitions the scope missed: their rows were
+        # not read, so this slice must not be swapped in
+        shutil.rmtree(staging)
+        if not hinted:
+            raise RuntimeError(f"{target_path}: partition values changed between reads")
+        return _merge(spark, target_path, raw, keys, partition_by, True, None, audit_col, order_by)
+    if not counts["inserted"] + counts["updated"]:
+        shutil.rmtree(staging)
+        return counts
+    maxes = {t: got[f"max{i}"] for i, t in enumerate(times)}
+    names = [f.name for f in out.schema]
+    fields = [f for f in out.schema if f.name not in partition_by]
+    if scoped:
+        # untouched partitions keep the columns they were written with
+        fields += [f for f in current.schema if f.name not in names + partition_by]
+        # the maxes of untouched partitions come from the previous record
+        for t, v in maxes.items():
+            old = commit.record_max(rec, t) if rec else None
+            maxes[t] = old if v is None or old is None else max(old, v)
+    schema = StructType(fields + [out.schema[p] for p in partition_by])
+    if scoped:
+        token = commit.swap_partitions(staging, target_path, base)
+        commit.write_record(target_path, schema, partition_by, maxes, counts, token)
+    else:
+        commit.write_record(staging, schema, partition_by, maxes, counts)
+        commit.swap_in(staging, target_path)
+    return counts
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -195,7 +317,8 @@ def merge_upsert(
     partition_by: list[str] | None = None,
     order_by: list[str] | None = None,
 ) -> dict[str, int]:
-    """MERGE ``updates`` into the parquet table at ``target_path``.
+    """MERGE ``updates`` into the parquet table at ``target_path``,
+    rewriting the whole table.
 
     whenMatched → update all columns; whenNotMatched → insert. Returns
     ``{"inserted": n, "updated": m}`` (reference K1 metric semantics).
@@ -210,56 +333,8 @@ def merge_upsert(
     single-partition driver-built batches; a shuffled/joined updates frame
     should always pass ``order_by``.
     """
-    if audit_col:
-        updates = updates.withColumn(audit_col, F.current_timestamp())
-    updates = dedupe_last_wins(updates, keys, order_by)
-    # One evaluation of the dedup across the count/join/write actions below
-    # (monotonically_increasing_id could otherwise re-evaluate differently).
-    updates = updates.localCheckpoint(eager=False)
-    current = _read_target(spark, target_path)
-    if current is None:
-        n = updates.count()
-        _atomic_replace(updates, target_path, partition_by)
-        return {"inserted": n, "updated": 0}
-
-    if audit_col and audit_col not in current.columns:
-        current = current.withColumn(audit_col, F.lit(None).cast("timestamp"))
-
-    # Single-pass MERGE: one full-outer join on the keys replaces the
-    # semi-count + anti-join + distinct trio (three actions, target
-    # scanned twice), and the inserted/updated metrics ride the WRITE
-    # itself via an Observation — no extra job runs just to count.
-    from pyspark.sql import Observation
-
-    u = updates.withColumn("_u_present", F.lit(True))
-    c = current.withColumn("_c_present", F.lit(True))
-    joined = u.alias("u").join(c.alias("c"), keys, "full_outer")
-    from_update = F.col("u._u_present").isNotNull()
-    in_target = F.col("c._c_present").isNotNull()
-    merged = joined.select(
-        *[
-            F.when(from_update, F.col(f"u.{col}"))
-            .otherwise(F.col(f"c.{col}"))
-            .alias(col)
-            if col not in keys
-            else F.col(col)
-            for col in updates.columns
-        ],
-        (from_update & in_target).alias("_is_update"),
-        (from_update & ~in_target).alias("_is_insert"),
-    )
-    obs = Observation()
-    observed = merged.observe(
-        obs,
-        F.sum(F.col("_is_update").cast("long")).alias("updated"),
-        F.sum(F.col("_is_insert").cast("long")).alias("inserted"),
-    ).drop("_is_update", "_is_insert")
-    _atomic_replace(observed, target_path, partition_by)
-    got = obs.get
-    return {
-        "inserted": int(got["inserted"] or 0),
-        "updated": int(got["updated"] or 0),
-    }
+    return _merge(spark, target_path, updates, keys, partition_by,
+                  audit_col=audit_col, order_by=order_by)
 
 
 def insert_if_absent(
@@ -270,7 +345,8 @@ def insert_if_absent(
 ) -> dict[str, int]:
     """Append only rows whose key is not yet present (reference K2,
     ``ON CONFLICT DO NOTHING`` on trade_id, deribit.py:83-137). Returns
-    ``{"inserted": n, "skipped": m}``."""
+    ``{"inserted": n, "skipped": m}``.  A partitioned target keeps its
+    layout: ``batch`` must carry the partition columns."""
     total = batch.count()
     # in-batch dedup: first occurrence wins (DO NOTHING keeps the first);
     # deduped-away rows count as skipped, like rowcount under DO NOTHING
@@ -288,8 +364,10 @@ def insert_if_absent(
     fresh = batch.join(current.select(*keys).distinct(), keys, "left_anti")
     n = fresh.count()
     if n:
-        # append-only: no rewrite of existing data, scales with the batch
-        fresh.select(current.columns).write.mode("append").parquet(target_path)
+        # append-only: no rewrite of existing data, scales with the batch;
+        # a partitioned table takes the rows into its partition directories
+        parts = commit.partition_columns(target_path) or []
+        fresh.select(current.columns).write.mode("append").partitionBy(*parts).parquet(target_path)
     return {"inserted": n, "skipped": total - n}
 
 
@@ -301,32 +379,14 @@ def upsert_partitioned(
     partition_col: str,
     audit_col: str | None = None,
     allow_cross_partition_keys: bool = False,
-    collect_metrics: bool = True,
-    durable_staging: bool = False,
+    *,
+    _touched: list | None = None,
 ) -> dict[str, int]:
     """Partition-pruned MERGE: only partitions present in ``updates`` are
-    read, merged, and dynamically overwritten — the 100 TB shape (the
-    write cost follows the incremental slice, not the table).
-
-    ``collect_metrics=False`` skips the inserted/updated count jobs
-    (two extra actions over the reconciliation join): per-trigger
-    foreachBatch sinks that never read the counts — the sketch stores —
-    shave two jobs per micro-batch, which dominates at toy batch sizes.
-
-    ``durable_staging`` (default off) materializes the merged slice to
-    a staging parquet directory instead of an eager
-    ``localCheckpoint()``.  The checkpoint path (r14) saves two full
-    I/O passes of the slice per call, but holds the merged slice ONLY
-    in executor block storage with severed lineage: an executor/block
-    loss between the checkpoint and the overwrite fails the write job
-    with no recompute path (the dynamic overwrite is still the one
-    commit point either way, so the target never ends up half-merged —
-    the job just has to be re-run), and checkpointed blocks are freed
-    only when the frame is GC'd.  For slice-sized micro-batches in
-    local mode that trade is right; a long-lived 100 TB streaming
-    posture with executor churn should pass ``durable_staging=True``
-    and pay the staging round trip for a recomputable intermediate
-    (VERDICT/ADVICE r14).
+    read, merged and swapped in — the 100 TB shape (the write cost
+    follows the incremental slice, not the table).  ``_touched`` is for
+    package callers that already hold the batch's partition values (from
+    an aggregate they run anyway).
 
     Reconciliation only sees the touched partitions, so a key that moves
     to a new ``partition_col`` value would leave its stale row alive in
@@ -343,69 +403,10 @@ def upsert_partitioned(
             "keys, or pass allow_cross_partition_keys=True if keys can "
             "never move between partitions."
         )
-    if audit_col:
-        updates = updates.withColumn(audit_col, F.current_timestamp())
-    # one evaluation across the four consumers below (distinct-partition
-    # collect, matched count, total count, merged write) — without this
-    # an expensive upstream frame (e.g. the streaming candle aggregate)
-    # recomputes per action, and current_timestamp would drift between
-    # them (same discipline as merge_upsert)
-    updates = updates.localCheckpoint(eager=False)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    current = _read_target(spark, target_path)
-    if current is None:
-        n = updates.count() if collect_metrics else -1
-        w = updates.write.mode("overwrite").partitionBy(partition_col)
-        w.parquet(target_path)
-        return {"inserted": n, "updated": 0}
-
-    parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    touched = current.where(F.col(partition_col).isin(parts))
-    # additive schema evolution: a column the batch carries but the
-    # stored table predates (audit stamps, the sketch store's per-day
-    # _bid replay marker) surfaces as NULL on surviving rows rather than
-    # failing the merge — the same contract Delta's mergeSchema gives
-    for col_name, dtype in updates.dtypes:
-        if col_name not in touched.columns:
-            touched = touched.withColumn(col_name, F.lit(None).cast(dtype))
-    if collect_metrics:
-        updated = updates.join(
-            touched.select(*keys).distinct(), keys, "left_semi"
-        ).count()
-        inserted = updates.count() - updated
-    else:
-        updated = inserted = -1
-    survivors = touched.join(updates.select(*keys), keys, "left_anti")
-    merged = survivors.select(updates.columns).unionByName(updates)
-    # Spark (correctly) refuses to overwrite a path present in the read
-    # plan.  An EAGER localCheckpoint materializes the merged slice and
-    # swaps its plan to an ExistingRDD scan — the dynamic overwrite is
-    # then legal without the old staging-parquet write + re-read round
-    # trip, which cost two extra full I/O passes of the slice per
-    # trigger (r14 optimization; durability trade documented in the
-    # docstring — durable_staging opts back into the recomputable
-    # staging file; the dynamic overwrite stays the one commit point
-    # on both paths).
-    # The final write repartitions by the partition column: without it
-    # every task fans out one file into EVERY touched day dir
-    # (tasks x partitions small files — ~1000 for a 30-day sketch batch);
-    # with it each day lands as one file and the per-trigger write cost
-    # is IO-bound on rows, not on file-open overhead.
-    staging = None
-    if durable_staging:
-        staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(staging)
-        merged = spark.read.parquet(staging)
-    else:
-        merged = merged.localCheckpoint()
-    try:
-        merged.repartition(F.col(partition_col)).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(target_path)
-    finally:
-        if staging is not None:
-            shutil.rmtree(staging, ignore_errors=True)
-    return {"inserted": inserted, "updated": updated}
+    return _merge(
+        spark, target_path, updates, keys, [partition_col],
+        scoped=True, touched=_touched, audit_col=audit_col,
+    )
 
 
 def moving_probe_frame(
@@ -466,10 +467,11 @@ def upsert_partitioned_moving(
 ) -> dict[str, int]:
     """Partition-pruned MERGE for keys that MAY move between partitions.
 
-    ``durable_staging``: as in :func:`upsert_partitioned` — opt back
-    into a recomputable staging-parquet materialization of the merged
-    slice instead of the (faster, executor-block-only) eager
-    ``localCheckpoint`` (r14 durability trade, documented there).
+    ``durable_staging`` writes the merged slice to a recomputable
+    staging parquet directory instead of an eager ``localCheckpoint``,
+    whose blocks live only in executor storage (an executor loss then
+    fails the write; the dynamic overwrite is the one commit point
+    either way).
 
     :func:`upsert_partitioned` forbids cross-partition keys because its
     reconciliation only reads the updates' own partitions — a moved key
@@ -507,7 +509,6 @@ def upsert_partitioned_moving(
         )
         return {"inserted": n, "updated": 0, "moved": 0}
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # (keys, new partition) of the batch, deduped once — feeds the probe
     # join AND the metrics aggregate
     ukp = updates.select(
@@ -537,19 +538,17 @@ def upsert_partitioned_moving(
     # evict EVERY row of an updated key from the touched slice (old and
     # new partition alike), then add the batch
     merged = moving_merge_frame(touched, ukeys, updates, keys)
-    # eager localCheckpoint instead of a staging-parquet round trip —
-    # same self-overwrite legality, two fewer I/O passes of the slice
-    # (see upsert_partitioned; r14 optimization, durable_staging opt-out)
+    # an eager localCheckpoint makes overwriting the path it read legal,
+    # two I/O passes of the slice cheaper than a staging round trip
     staging = None
     if durable_staging:
-        staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(staging)
+        staging = commit.stage(merged, target_path)
         staged = spark.read.parquet(staging)
     else:
         staged = merged.localCheckpoint()
-    staged.write.mode("overwrite").partitionBy(partition_col).parquet(
-        target_path
-    )
+    staged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(target_path)
     # dynamic overwrite only touches partitions PRESENT in the write: a
     # partition fully drained by evictions (its only rows moved away)
     # would silently keep its stale files — drop those directories

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks.commit import snapshot
+
 TABLES = (
     "region",
     "nation",
@@ -41,13 +43,17 @@ def ensure_session_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.ansi.enabled", "false")
 
 
-# (applicationId, sf_dir, name) -> loaded DataFrame. The benchmark tables
-# are immutable snapshots, and a DataFrame is an immutable logical plan, so
-# reusing one across queries is safe — and skips the ~100 ms of driver-side
-# file listing + footer/schema read that spark.read.parquet pays per call
-# (tens of seconds across a 90-query benchmark session). Keyed by
-# applicationId so a frame never leaks into another session.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# (applicationId, sf_dir, name) -> (snapshot token, loaded DataFrame).
+# A DataFrame is an immutable logical plan that pins the file listing it
+# was built from, so reusing one across queries is safe while the files
+# are unchanged — and skips the ~100 ms of file listing +
+# footer/schema read that spark.read.parquet pays per call (tens of
+# seconds across a 90-query benchmark session).  Each hit re-checks the
+# table's snapshot token (the commit record's: path, size and mtime of
+# every data file), so a table rewritten under the same path is read
+# afresh.  Keyed by applicationId so a frame never leaks into another
+# session.
+_TABLE_CACHE: dict[tuple[str, str, str], tuple[list, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -58,10 +64,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the session timezone at execution time, so a consumer that drifted
     # the conf between queries would silently shift cached tables' values.
     ensure_session_conf(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    token = snapshot(path)
     cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if cached is not None and cached[0] == token:
+        return cached[1]
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos -> micros, exact integer truncation (matches DuckDB's coercion;
         # double division would round and drift by 1us on ~half the rows)
@@ -75,7 +83,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _TABLE_CACHE[key] = df
+    _TABLE_CACHE[key] = (token, df)
     while len(_TABLE_CACHE) > 64:
         _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
     return df

@@ -61,7 +61,6 @@ def _merge_batch_into_store(
         merged,
         keys=["day", "bucket"],
         partition_col="day",
-        collect_metrics=False,
     )
 
 
@@ -222,7 +221,6 @@ def _additive_apply_batch(
         merged,
         keys=["day", *cell_cols],
         partition_col="day",
-        collect_metrics=False,
     )
 
 
@@ -570,7 +568,6 @@ def reservoir_apply_batch(
         merged,
         keys=["day", "event_type", "rank"],
         partition_col="day",
-        collect_metrics=False,
     )
 
 
@@ -701,7 +698,6 @@ def mg_apply_batch(
         summary,
         keys=["day", "rank"],
         partition_col="day",
-        collect_metrics=False,
     )
 
 
@@ -863,7 +859,6 @@ def weighted_reservoir_apply_batch(
         merged,
         keys=["lang", "source", "rank"],
         partition_col="lang",
-        collect_metrics=False,
     )
 
 

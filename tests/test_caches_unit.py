@@ -89,3 +89,24 @@ def test_persisted_artifact_survives_rebuild_requests(spark, tmp_path):
 
     b = A.session_artifact(spark, "test:persist/v1", poisoned, store_dir=store)
     assert {r.y for r in b.collect()} == {10, 11, 12, 13}
+
+
+def test_table_cache_serves_a_rewritten_table_afresh(spark, tmp_path):
+    d = str(tmp_path)
+    spark.range(3).write.parquet(f"{d}/t.parquet")
+    assert load_table(spark, d, "t").count() == 3
+    spark.range(10, 15).write.mode("overwrite").parquet(f"{d}/t.parquet")
+    assert sorted(r.id for r in load_table(spark, d, "t").collect()) == list(range(10, 15))
+
+
+def test_table_cache_hit_does_not_reread(spark):
+    first = load_table(spark, SF_DIR, "events")
+    sc = spark.sparkContext
+    sc.setJobGroup("table-cache-hit", "repeat load of an unchanged table")
+    try:
+        again = load_table(spark, SF_DIR, "events")
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001 - no pyspark wrapper
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # noqa: SLF001
+    assert again is first
+    assert not sc.statusTracker().getJobIdsForGroup("table-cache-hit")
