@@ -290,21 +290,26 @@ FROM chain GROUP BY expiry
 def q_iv_smile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IV smile: null-skipping average implied vol per (expiry, strike)
     with quote counts and traded volume — the P5 null-skip over the
-    derived chain, decimal-exact mean (sum/count, one division)."""
+    derived chain.
+
+    The mean is the exact DECIMAL(38,6) sum of the quotes cast to DOUBLE,
+    then divided in DOUBLE by the quote count (one IEEE division), then
+    rounded half away from zero to 6 dp; :func:`oracle_iv_smile` states
+    the same steps.  A DECIMAL division would round the quotient at its
+    result scale in Spark but not in DuckDB (which divides in DOUBLE), so
+    a mean ending in 5 at the 7th decimal rounded apart."""
     c = _chain(spark, sf_dir)
-    iv_sum = F.sum(F.col("iv").cast("decimal(38,6)"))
     n_iv = F.count(F.col("iv"))
     return c.groupBy("expiry", "strike").agg(
-        round_half_away((iv_sum / n_iv).cast("double"), 6).alias("avg_iv"),
+        round_half_away(dec_sum(F.col("iv")) / n_iv, 6).alias("avg_iv"),
         n_iv.alias("n_iv_quotes"),
         dec_sum(F.col("amount")).alias("volume"),
     )
 
 
 def oracle_iv_smile() -> str:
-    avg_iv = sql_round_half_away(
-        "CAST(SUM(CAST(iv AS DECIMAL(38,6))) / COUNT(iv) AS DOUBLE)", 6
-    )
+    # DECIMAL sum cast to DOUBLE, divided in DOUBLE: see q_iv_smile
+    avg_iv = sql_round_half_away(f"{sql_dec_sum('iv')} / COUNT(iv)", 6)
     return f"""
 WITH {_CHAIN_SQL}
 SELECT expiry, strike, {avg_iv} AS avg_iv,

@@ -90,6 +90,17 @@ def swap_partitions(staging: str, path: str, base: list[list]) -> list[list]:
     return token
 
 
+def append_files(staging: str, path: str) -> None:
+    """Move every data file of ``staging`` to the same relative path
+    under ``path`` — the commit of an append, which Spark's file
+    committer performs the same way.  Spark names each file after its
+    write job, so no name collides with a file already there."""
+    for e in snapshot(staging):
+        dest = os.path.join(path, e[0])
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.rename(os.path.join(staging, e[0]), dest)
+
+
 def partition_columns(path: str, rec: dict | None = None) -> list[str] | None:
     """The table's partition columns (``[]`` for a flat table, ``None``
     for no table): from a current record, else from the top-level

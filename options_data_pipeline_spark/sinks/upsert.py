@@ -346,8 +346,14 @@ def insert_if_absent(
     """Append only rows whose key is not yet present (reference K2,
     ``ON CONFLICT DO NOTHING`` on trade_id, deribit.py:83-137). Returns
     ``{"inserted": n, "skipped": m}``.  A partitioned target keeps its
-    layout: ``batch`` must carry the partition columns."""
-    total = batch.count()
+    layout: ``batch`` must carry the partition columns.
+
+    One write job: the fresh rows go to a staging directory while two
+    ``Observation``s count the batch and the rows written; the staged
+    files then move into the table.  A batch whose keys all exist
+    commits nothing."""
+    seen, kept = Observation(), Observation()
+    batch = batch.observe(seen, F.count(F.lit(1)).alias("n"))
     # in-batch dedup: first occurrence wins (DO NOTHING keeps the first);
     # deduped-away rows count as skipped, like rowcount under DO NOTHING
     w = Window.partitionBy(*keys).orderBy(F.monotonically_increasing_id().asc())
@@ -358,17 +364,18 @@ def insert_if_absent(
     )
     current = _read_target(spark, target_path)
     if current is None:
-        n = batch.count()
-        _atomic_replace(batch, target_path)
-        return {"inserted": n, "skipped": total - n}
-    fresh = batch.join(current.select(*keys).distinct(), keys, "left_anti")
-    n = fresh.count()
-    if n:
+        _atomic_replace(batch.observe(kept, F.count(F.lit(1)).alias("n")), target_path)
+    else:
         # append-only: no rewrite of existing data, scales with the batch;
         # a partitioned table takes the rows into its partition directories
-        parts = commit.partition_columns(target_path) or []
-        fresh.select(current.columns).write.mode("append").partitionBy(*parts).parquet(target_path)
-    return {"inserted": n, "skipped": total - n}
+        fresh = batch.join(current.select(*keys), keys, "left_anti")
+        out = fresh.select(current.columns).observe(kept, F.count(F.lit(1)).alias("n"))
+        staging = commit.stage(out, target_path, commit.partition_columns(target_path))
+        if kept.get["n"]:
+            commit.append_files(staging, target_path)
+        shutil.rmtree(staging)
+    n = kept.get["n"]
+    return {"inserted": n, "skipped": seen.get["n"] - n}
 
 
 def upsert_partitioned(

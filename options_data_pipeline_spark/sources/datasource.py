@@ -23,7 +23,8 @@ Options:
 
 - ``symbols``: comma-separated symbol list (required)
 - ``start_ms`` / ``end_ms``: window in epoch milliseconds (required)
-- ``chunk_ms``: partition granularity (default 1h = 3_600_000)
+- ``chunk_ms``: partition granularity (default 1h = 3_600_000); a chunk
+  wider than one page (1000 intervals) is fetched in several pages
 - ``interval``: kline interval string (default "1h")
 - ``base_url``: endpoint (default Binance shape)
 - ``transport``: ``http`` | ``synthetic`` (offline deterministic feed)
@@ -47,7 +48,10 @@ def synthetic_transport(url: str, payload: dict | None = None) -> list:
     """Deterministic offline kline feed: one positional-array kline per
     minute of the requested window, values derived from (symbol,
     open_time) alone — identical on every executor and every re-run, so
-    task retries and repartitioned reads stay consistent."""
+    task retries and repartitioned reads stay consistent.  Open times sit
+    on the minute grid and a page holds at most ``limit`` klines, as the
+    exchange returns them, so a cursor resuming from the last open_time
+    + 1 gets the next minute."""
     import urllib.parse as _up
 
     q = dict(_up.parse_qsl(url.split("?", 1)[1]))
@@ -56,7 +60,7 @@ def synthetic_transport(url: str, payload: dict | None = None) -> list:
     sym = q["symbol"]
     seed = sum(sym.encode())
     out = []
-    t = start
+    t = -(-start // 60_000) * 60_000
     while t < end and len(out) < int(q.get("limit", 1000)):
         base = ((t // 60_000) + seed) % 1000 / 10.0
         out.append(
@@ -131,7 +135,7 @@ class KlinesReader(DataSourceReader):
             interval=self.interval,
             transport=_TRANSPORTS.get(self.transport_name, default_transport),
         )
-        for row in src.fetch(
+        for row in src.fetch_range(
             partition.symbol, partition.start_ms, partition.end_ms
         ):
             yield tuple(row[f] for f in _FIELDS)
@@ -183,7 +187,7 @@ class KlinesStreamReader(SimpleDataSourceStreamReader):
         rows = [
             tuple(row[f] for f in _FIELDS)
             for sym in self.symbols
-            for row in src.fetch(sym, lo, hi)
+            for row in src.fetch_range(sym, lo, hi)
         ]
         return iter(rows), {"ms": hi}
 
@@ -203,7 +207,7 @@ class KlinesStreamReader(SimpleDataSourceStreamReader):
         return iter(
             tuple(row[f] for f in _FIELDS)
             for sym in self.symbols
-            for row in src.fetch(sym, lo, hi)
+            for row in src.fetch_range(sym, lo, hi)
         )
 
     def commit(self, end: dict) -> None:

@@ -90,6 +90,16 @@ def _ms_to_dt(ms: int):
     return datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc).replace(tzinfo=None)
 
 
+def _dt_to_ms(dt) -> int:
+    """Inverse of :func:`_ms_to_dt`.  The naive datetime is UTC: tzinfo is
+    pinned before ``.timestamp()``, so a cursor built from it does not
+    shift by the host's UTC offset (re-fetching forever west of UTC,
+    skipping rows east of it)."""
+    from datetime import timezone
+
+    return round(dt.replace(tzinfo=timezone.utc).timestamp() * 1000)
+
+
 class KlinesSource:
     """Binance-shape kline source (positional-array rows)."""
 
@@ -125,6 +135,24 @@ class KlinesSource:
             }
             for k in raw
         ]
+
+    def fetch_range(self, symbol: str, start_ms: int, end_ms: int) -> list[dict]:
+        """Every kline of ``[start_ms, end_ms)``: a window wider than
+        ``limit`` intervals takes several pages, each resuming from the
+        last open_time + 1 (the reference's cursor, binance.py:30-64),
+        until a short page or ``end_ms``."""
+        out: list[dict] = []
+        cursor = start_ms
+        while cursor < end_ms:
+            page = self.fetch(symbol, cursor, end_ms)
+            out.extend(page)
+            if len(page) < self.limit:
+                break
+            nxt = _dt_to_ms(page[-1]["open_time"]) + 1
+            if nxt <= cursor:  # a misbehaving feed would page forever
+                raise RuntimeError(f"{symbol}: a full page from {cursor} did not advance the cursor")
+            cursor = nxt
+        return out
 
     def to_df(self, spark: SparkSession, rows: Sequence[dict]) -> DataFrame:
         return spark.createDataFrame(list(rows), KLINE_SCHEMA)
@@ -267,16 +295,7 @@ class OptionTradesSource:
             out.extend(trades)
             if not has_more or not trades:
                 return out
-            # ts is a naive UTC datetime; pin tzinfo=utc before .timestamp()
-            # so the epoch math is host-timezone independent (a naive
-            # .timestamp() would shift the cursor by the local UTC offset —
-            # re-fetching forever west of UTC, skipping trades east of it).
-            from datetime import timezone
-
-            last_ms = int(
-                trades[-1]["ts"].replace(tzinfo=timezone.utc).timestamp() * 1000
-            )
-            cursor = last_ms + 1
+            cursor = _dt_to_ms(trades[-1]["ts"]) + 1
             if self.rate_limit_s:
                 time.sleep(self.rate_limit_s)
 

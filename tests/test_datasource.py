@@ -80,6 +80,49 @@ def test_deterministic_across_chunkings(registered):
     assert a == b
 
 
+def test_day_chunks_of_minute_klines_are_paged(registered):
+    """A 1-day chunk holds 1440 one-minute klines, more than the
+    1000-row page the exchange returns: each partition pages through
+    its chunk instead of keeping the first page."""
+    day = 24 * HOUR
+    df = _read(registered, symbols="BTCUSDT,ETHUSDT,SOLUSDT",
+               end_ms=START + 7 * day, chunk_ms=day, interval="1m")
+    n, keys = registered.sql(
+        "SELECT count(*), count(DISTINCT symbol, open_time) FROM {df}", df=df
+    ).first()
+    assert (n, keys) == (30_240, 30_240)
+
+
+def test_fetch_range_resumes_after_the_last_open_time():
+    from options_data_pipeline_spark.sources.datasource import synthetic_transport
+    from options_data_pipeline_spark.sources.rest import KlinesSource
+
+    urls = []
+
+    def transport(url, payload):
+        urls.append(url)
+        return synthetic_transport(url, payload)
+
+    t0 = START // 60_000 * 60_000  # on the minute grid
+    src = KlinesSource(interval="1m", transport=transport, limit=50)
+    rows = src.fetch_range("BTCUSDT", t0, t0 + 120 * 60_000)
+    assert [r["open_time"] for r in rows] == sorted({r["open_time"] for r in rows})
+    assert len(rows) == 120
+    # pages of 50, 50 and a short 20
+    assert [u.split("startTime=")[1].split("&")[0] for u in urls] == [
+        str(t0), str(t0 + 49 * 60_000 + 1), str(t0 + 99 * 60_000 + 1),
+    ]
+
+
+def test_fetch_range_refuses_a_page_that_does_not_advance():
+    from options_data_pipeline_spark.sources.rest import KlinesSource
+
+    stuck = [[START, "1", "1", "1", "1", "1", 0, 0, 0, 0, 0, 0]] * 2
+    src = KlinesSource(transport=lambda url, payload: stuck, limit=2)
+    with pytest.raises(RuntimeError, match="did not advance"):
+        src.fetch_range("BTCUSDT", START + 1, START + HOUR)
+
+
 def test_values_follow_synthetic_contract(registered):
     df = _read(registered, symbols="BTCUSDT", end_ms=START + HOUR)
     rows = df.orderBy("open_time").collect()

@@ -6,6 +6,7 @@ T2 (late-data lookback repair), T5 (idempotent reruns).
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -66,6 +67,39 @@ def test_insert_if_absent(spark, tmp):
     assert r2 == {"inserted": 1, "skipped": 1}
     got = {(r.k, r.v) for r in spark.read.parquet(t).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}  # existing row NOT changed
+
+
+def _jobs(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001 - no pyspark wrapper
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)  # noqa: SLF001
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_insert_if_absent_counts_ride_its_one_write(spark, tmp):
+    """The counts come from the write itself: a schema read plus the
+    write's stages, no count jobs (they took 12 jobs with them).  A
+    batch whose keys are all stored commits nothing."""
+    t = f"{tmp}/t"
+    insert_if_absent(spark, t, _df(spark, [(1, "a"), (2, "b")]), ["k"])
+    batch = _df(spark, [(2, "x"), (3, "c"), (3, "c2"), (4, "d"), (1, "y")])
+    r, jobs = _jobs(spark, "insert-if-absent-mixed", lambda: insert_if_absent(spark, t, batch, ["k"]))
+    assert r == {"inserted": 2, "skipped": 3}
+    assert jobs <= 4, jobs
+    files = sorted(os.listdir(t))
+    stale = _df(spark, [(4, "z"), (1, "z"), (1, "zz")])
+    r, jobs = _jobs(spark, "insert-if-absent-stale", lambda: insert_if_absent(spark, t, stale, ["k"]))
+    assert r == {"inserted": 0, "skipped": 3}
+    assert jobs <= 4, jobs
+    assert sorted(os.listdir(t)) == files
+    assert not [n for n in os.listdir(tmp) if n != "t"]  # no staging left behind
+    got = {(r.k, r.v) for r in spark.read.parquet(t).collect()}
+    assert got == {(1, "a"), (2, "b"), (3, "c"), (4, "d")}
 
 
 def test_upsert_partitioned(spark, tmp):
