@@ -237,48 +237,6 @@ def main() -> None:
     weekly_pair_artifact(spark, sf_dir)
     irls_beta_artifact(spark, sf_dir)
 
-    # file-pruned MERGE micro-bench (VERDICT r3 ask #8): a range-sorted
-    # copy of events, then a single-key-range update batch — the merge
-    # must rewrite only the files whose footer range intersects the
-    # batch. files_rewritten / files_untouched go to stderr and
-    # PERFORMANCE.md; the timing joins the headline total.
-    import shutil
-    import tempfile
-
-    from options_data_pipeline_spark.sinks.layout import write_range_sorted
-    from options_data_pipeline_spark.sinks.upsert import upsert_file_pruned
-
-    fp_work = tempfile.mkdtemp(prefix="bench_fp_")
-    try:
-        fp_target = os.path.join(fp_work, "events_sorted")
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        write_range_sorted(ev, fp_target, ["event_id"], num_files=32)
-        lo_id = ev.agg(F.min("event_id")).first()[0]
-        batch = (
-            spark.read.parquet(fp_target)
-            .where(F.col("event_id").between(lo_id, lo_id + 19))
-            .withColumn("value", F.col("value") * 2.0)
-        ).localCheckpoint()
-        fp_runs, fp_stats = [], None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fp_stats = upsert_file_pruned(
-                spark, fp_target, batch,
-                keys=["event_id"], range_key="event_id",
-            )
-            fp_runs.append(time.perf_counter() - t0)
-        timings["file_pruned_upsert"] = round(min(fp_runs), 3)
-        log(
-            f"  file_pruned_upsert: {min(fp_runs):.2f}s "
-            f"(files_rewritten={fp_stats['files_rewritten']}, "
-            f"files_untouched={fp_stats['files_untouched']}, "
-            f"updated={fp_stats['updated']})"
-        )
-    finally:
-        shutil.rmtree(fp_work, ignore_errors=True)
-
     # STABLE execution order (r15, VERDICT r14 ask #2): registration
     # order, decoupled from the _PRIORITY promotion that orders the
     # driver's oracle sample — promoted (= this round's changed)
@@ -400,7 +358,7 @@ def main() -> None:
     # the ~250 cheap analytics queries became a rounding error in it —
     # split the headline so each population trends on its own.
     harness_names = registry.harness_queries()
-    artifact_names = set(artifact_builds) | {"file_pruned_upsert"}
+    artifact_names = set(artifact_builds)
 
     def _tag(name: str) -> str:
         if name in artifact_names:

@@ -13,8 +13,9 @@ Layout
                    gap scan, dedup, simhash, similarity/ANN, as-of join,
                    salted join, connected components, text stats,
                    multimodal binary kernels)
-- ``sinks``      : keyed-upsert / insert-if-absent sinks (MERGE emulation,
-                   partition-scoped swaps, commit record)
+- ``sinks``      : keyed-upsert / insert-if-absent / CDC sinks over one
+                   merge core and one commit path (staged write, journaled
+                   swap, commit record), plus layout jobs
 - ``streaming``  : Structured Streaming jobs (dedup ingest, foreachBatch
                    lookback-recompute MERGE, applyInPandasWithState)
 - ``jobs``       : batch lifecycles (watermark sync, gap repair, backfill,

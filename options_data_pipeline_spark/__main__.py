@@ -55,14 +55,6 @@ def main(argv: list[str] | None = None) -> int:
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"),
     )
     sqlp.add_argument("--limit", type=int, default=0, help="0 = no limit")
-    tbl = sub.add_parser(
-        "table", help="versioned-table ops: history / read / vacuum / compact"
-    )
-    tbl.add_argument("op", choices=["history", "read", "vacuum", "compact"])
-    tbl.add_argument("path")
-    tbl.add_argument("--version", type=int, default=None)
-    tbl.add_argument("--keep-latest", type=int, default=1)
-    tbl.add_argument("--limit", type=int, default=20)
     args = p.parse_args(argv)
 
     from .plans import registry
@@ -106,33 +98,6 @@ def main(argv: list[str] | None = None) -> int:
         cols = df.columns
         for row in df.toLocalIterator():
             print(json.dumps({c: _jsonable(row[c]) for c in cols}, default=str))
-        return 0
-
-    if args.cmd == "table":
-        from .sinks import versioned as V
-
-        if args.op == "history":
-            for e in V.history(args.path):
-                print(json.dumps(e))
-            return 0
-        from .session import get_spark
-
-        spark = get_spark(app_name=f"cli-table-{args.op}")
-        if args.op == "vacuum":
-            print(json.dumps(V.vacuum(args.path, keep_latest=args.keep_latest)))
-            return 0
-        if args.op == "compact":
-            print(json.dumps(V.compact(spark, args.path)))
-            return 0
-        df = V.read_version(spark, args.path, args.version)
-        if args.limit:
-            df = df.limit(args.limit)
-        for row in df.toLocalIterator():
-            print(
-                json.dumps(
-                    {c: _jsonable(row[c]) for c in df.columns}, default=str
-                )
-            )
         return 0
 
     fn = registry.queries().get(args.query)

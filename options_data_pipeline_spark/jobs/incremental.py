@@ -29,7 +29,12 @@ from pyspark.sql import functions as F
 from ..functions.timeutil import utc_now
 from ..operators.gaps import detect_gaps
 from ..sinks import commit
-from ..sinks.upsert import insert_if_absent, merge_upsert, upsert_partitioned
+from ..sinks.upsert import (
+    first_occurrences,
+    insert_if_absent,
+    merge_upsert,
+    upsert_partitioned,
+)
 
 FetchRange = Callable[[datetime, datetime], DataFrame]
 
@@ -77,12 +82,16 @@ def _upsert(
 
 
 def _with_day(target_path: str, page: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """A page bound for a table :func:`_upsert` laid out by day gains the
-    table's ``bucket_date``, derived from the page's time key."""
-    if commit.partition_columns(target_path) != [DAY_COL] or DAY_COL in page.columns:
+    """A page bound for a table :func:`_upsert` lays out by day gains the
+    table's ``bucket_date``, derived from the page's time key: a table
+    partitioned on it, or a fresh table whose keys hold one time column."""
+    layout = commit.partition_columns(target_path)
+    if layout not in ([DAY_COL], None) or DAY_COL in page.columns:
         return page
     times = [c for c, t in page.dtypes if c in keys and t in ("timestamp", "timestamp_ntz", "date")]
     if len(times) != 1:
+        if layout is None:
+            return page  # a fresh table with no one time key stays flat
         raise ValueError(
             f"{target_path} is partitioned on {DAY_COL}, but keys {list(keys)} "
             f"hold {len(times)} time columns to derive it from, not one"
@@ -159,13 +168,27 @@ def backfill(
     """T7 bounded historical walk: ``fetch_page(cursor, end)`` returns a
     page and the next cursor (None when exhausted); pages append via
     insert-if-absent so an interrupted backfill resumes idempotently.  A
-    table the sync has laid out by day keeps that layout."""
+    fresh table is laid out as the sync lays it out (by day when its keys
+    hold one time column), and a table the sync has laid out keeps that
+    layout, so later syncs rewrite only the days they fetch."""
+    # a crashed swap decides whether the table is fresh: finish it first
+    commit.recover(target_path)
     cursor, pages, inserted = start, 0, 0
     while cursor is not None and cursor < end and pages < max_pages:
         page, next_cursor = fetch_page(cursor, end)
         if page.count():
+            fresh = commit.partition_columns(target_path) is None
             page = _with_day(target_path, page, keys)
-            m = insert_if_absent(spark, target_path, page, keys=list(keys))
+            if fresh and DAY_COL in page.columns:
+                # the first page creates the table by day (the sink's cold
+                # start would write it flat); the first occurrence of a
+                # key wins, as insert-if-absent keeps it
+                m = upsert_partitioned(
+                    spark, target_path, first_occurrences(page, list(keys)), list(keys),
+                    DAY_COL, allow_cross_partition_keys=True,
+                )
+            else:
+                m = insert_if_absent(spark, target_path, page, keys=list(keys))
             inserted += m["inserted"]
         pages += 1
         cursor = next_cursor

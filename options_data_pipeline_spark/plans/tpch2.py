@@ -1554,8 +1554,7 @@ def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
       same z arithmetic;
     - **the pruning property**: per-file min/max of BOTH dimensions,
       read from the parquet FOOTERS (the statistics a real scan prunes
-      with, via the same pyarrow path as ``sinks.layout.
-      parquet_file_ranges``), must bound which files a range predicate
+      with, via pyarrow), must bound which files a range predicate
       on EITHER dimension touches — the touched-file matrix for four
       pinned probe windows (two per dimension) is in the driver hash.
 

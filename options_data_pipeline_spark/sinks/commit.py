@@ -1,23 +1,39 @@
-"""Commits for the parquet sinks: staged writes, directory swaps, and
-the commit record — what the last merge already knows about its table.
+"""Commits for the parquet sinks: staged writes, journaled directory
+swaps, and the commit record — what the last merge already knows about
+its table.
 
-A merge writes its slice to a staging directory beside the table, then
-renames it into place: the whole table directory (:func:`swap_in`), or
-each partition directory the slice holds (:func:`swap_partitions`).
+Every keyed sink commits the same way: it writes its slice to a staging
+directory beside the table (:func:`stage`), then renames it into place —
+the whole table directory (:func:`swap_in`), or each partition directory
+the slice holds (:func:`swap_partitions`), or, for an append, each new
+file (:func:`append_files`).  No sink writes into a live table path.
+Partition compaction (:func:`.layout.compact_partitions`) commits its
+rewritten partitions through :func:`swap_partitions` as well.
 
-The merge core (:mod:`.upsert`) writes ``_commit.json`` into the table
-directory as the LAST step of a commit.  It holds the table's schema,
-its partition columns, the max of every timestamp/date key column, the
-commit's counts, and a snapshot token: the (relative path, size, mtime)
-of every data file the commit left behind.
+A swap is journaled before its first rename: ``<table>.swap.json`` names
+the staging directory, the directory that collects the replaced
+partitions, and the partitions to swap in and to drop.  A staged
+partition directory that holds no data file drains its partition (its
+keys moved away), so the table's directory for it is dropped after the
+swaps.  Each step checks what is already done, so the journal can be
+replayed from any crash point: :func:`recover` rolls an interrupted swap
+forward, and the sinks call it before they read a table.  A crash leaves
+the old table or, once the journal is replayed, the new one — never a
+partition missing or held twice.
+
+The merge core (:mod:`.upsert`) writes ``_commit.json`` as the LAST step
+of a commit.  It holds the table's schema, its partition columns, the
+max of every timestamp/date key column, the commit's counts, and a
+snapshot token: the (relative path, size, mtime) of every data file the
+commit left behind.
 
 Readers use the record only while its token equals the directory
 listing, so the record can be stale but never wrong: a writer that
-bypasses the core (an append, a directory swap, Spark's own overwrite)
-or a crash between the data commit and the record write changes the
-listing, and the reader falls back to scanning the table.  A valid
-record turns a watermark probe into a file stat, and a target read into
-a scan with a known schema (no schema-inference job).
+bypasses the core (an append, Spark's own overwrite) or a crash between
+the swap and the record write changes the listing, and the reader falls
+back to scanning the table.  A valid record turns a watermark probe into
+a file stat, and a target read into a scan with a known schema (no
+schema-inference job).
 
 The leading underscore keeps Spark's parquet listing from treating the
 record as data, as it does for ``_SUCCESS``.
@@ -50,43 +66,107 @@ def stage(df: DataFrame, path: str, partition_by: list[str] | None = None) -> st
     return staging
 
 
-def swap_in(staging: str, path: str) -> None:
-    """Swap a staged table into place.  A local-FS rename is atomic; on
-    object stores the same pattern runs through a metastore/table-format
-    commit (Delta/Iceberg), which is the production path this emulates."""
+# Characters Spark escapes in partition directory names (its
+# ExternalCatalogUtils.escapePathName): this set and the control
+# characters become %XX; space and non-ASCII stay as they are.
+_PATH_ESCAPE_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
+
+
+def partition_dir(col: str, value) -> str:
+    """The directory name Spark gives the partition ``col = value``."""
+    if value is None or value == "":
+        return f"{col}=__HIVE_DEFAULT_PARTITION__"
+    s = ("true" if value else "false") if isinstance(value, bool) else str(value)
+    esc = "".join(
+        f"%{ord(ch):02X}" if ch in _PATH_ESCAPE_CHARS or "\x00" < ch < " " else ch
+        for ch in s
+    )
+    return f"{col}={esc}"
+
+
+def _journal(path: str) -> str:
+    return f"{path}.swap.json"
+
+
+def _swap(path: str, staging: str, parts: list[str] | None = None, drops: list[str] = ()) -> None:
+    """Journal a swap of ``staging`` into ``path``, then roll it forward.
+    ``parts`` names the partition directories to swap in (``None``: the
+    whole table), ``drops`` the table's partition directories to drop."""
     old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(staging, path)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    entry = {
+        "staging": os.path.basename(staging),
+        "old": os.path.basename(old),
+        "parts": parts,
+        "drop": list(drops),
+    }
+    tmp = f"{_journal(path)}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        json.dump(entry, fh)
+    os.replace(tmp, _journal(path))
+    _roll_forward(path, entry)
+
+
+def _roll_forward(path: str, entry: dict) -> None:
+    """Finish the journaled swap ``entry``: each step is skipped when
+    done, so a replay after a crash at any point converges."""
+    parent = os.path.dirname(path)
+    staging = os.path.join(parent, entry["staging"])
+    old = os.path.join(parent, entry["old"])
+    if entry["parts"] is None:
+        moves = [(staging, path, old)]
+    else:
+        os.makedirs(old, exist_ok=True)
+        moves = [(os.path.join(staging, n), os.path.join(path, n), os.path.join(old, n))
+                 for n in entry["parts"]]
+    for src, dest, trash in moves:
+        if os.path.exists(src):  # not swapped in yet
+            if os.path.exists(dest):
+                os.rename(dest, trash)
+            os.rename(src, dest)
+    for name in entry["drop"]:
+        if os.path.exists(os.path.join(path, name)):
+            os.rename(os.path.join(path, name), os.path.join(old, name))
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    os.remove(_journal(path))
+
+
+def recover(path: str) -> None:
+    """Roll forward a swap into ``path`` that a crashed writer journaled
+    but did not finish; a no-op when there is none."""
+    try:
+        with open(_journal(path)) as fh:
+            entry = json.load(fh)
+    except FileNotFoundError:
+        return
+    _roll_forward(path, entry)
+
+
+def swap_in(staging: str, path: str) -> None:
+    """Swap a staged table into place, journaled.  A local-FS rename is
+    atomic; on object stores the same pattern runs through a
+    metastore/table-format commit (Delta/Iceberg)."""
+    _swap(path, staging)
 
 
 def swap_partitions(staging: str, path: str, base: list[list]) -> list[list]:
     """Replace each partition directory of ``path`` that ``staging``
-    holds, one rename pair per partition — the commit Spark's dynamic
-    partition overwrite performs, without reading and writing the same
-    path in one job.
+    holds, one journaled swap for all of them — the commit Spark's
+    dynamic partition overwrite performs, without reading and writing
+    the same path in one job.  A staged directory with no data file
+    drops the table's directory of that partition.
 
     Returns the token of the table this commit leaves behind, built from
-    ``base`` (the token of the files the merge read) minus the swapped
+    ``base`` (the token of the files the merge read) minus the replaced
     partitions plus the staged files — not from a fresh listing, so a
     file another writer added meanwhile makes the record stale."""
     staged = snapshot(staging)
-    parts = {e[0].split(os.sep, 1)[0] for e in staged}
-    token = sorted([e for e in base if e[0].split(os.sep, 1)[0] not in parts] + staged)
-    old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    os.makedirs(old)
-    for name in sorted(os.listdir(staging)):
-        src = os.path.join(staging, name)
-        if _hidden(name) or not os.path.isdir(src):
-            continue  # _SUCCESS and checksum files
-        dest = os.path.join(path, name)
-        if os.path.exists(dest):
-            os.rename(dest, os.path.join(old, name))
-        os.rename(src, dest)
-    shutil.rmtree(staging)
-    shutil.rmtree(old)
+    names = [n for n in sorted(os.listdir(staging))
+             if not _hidden(n) and os.path.isdir(os.path.join(staging, n))]
+    full = {e[0].split(os.sep, 1)[0] for e in staged}
+    token = sorted([e for e in base if e[0].split(os.sep, 1)[0] not in names] + staged)
+    drops = [n for n in names if n not in full and os.path.isdir(os.path.join(path, n))]
+    _swap(path, staging, [n for n in names if n in full], drops)
     return token
 
 

@@ -20,8 +20,9 @@ Two jobs cover the patterns the incremental pipelines create:
   hourly lookback rewrites) leave a trail of small files in each date
   partition; small files at 100 TB mean scheduler pressure and poor scan
   throughput. Compaction rewrites only the named partitions down to
-  ``files_per_partition`` files, via the same atomic-swap discipline as
-  the upsert sinks — readers never see a half-compacted partition.
+  ``files_per_partition`` files, committed as the upsert sinks commit:
+  one journaled :func:`.commit.swap_partitions` for every partition it
+  rewrote — readers never see a half-compacted partition.
 
 Neither job changes a single row — both are pure physical rewrites, and
 the tests assert that (same content before/after) plus the layout
@@ -31,11 +32,12 @@ property itself (disjoint per-file ranges; file count).
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import commit
 
 
 def write_range_sorted(
@@ -251,13 +253,14 @@ def compact_partitions(
     yesterday's partition after its last micro-batch). Returns
     ``{"partitions_compacted": n, "files_before": b, "files_after": a}``.
     """
+    commit.recover(path)
     targets = []
     for entry in sorted(os.listdir(path)):
         if not entry.startswith(f"{partition_col}="):
             continue
         value = entry.split("=", 1)[1]
         if partitions is None or value in partitions:
-            targets.append((value, os.path.join(path, entry)))
+            targets.append((value, entry))
 
     # size-targeted mode: ONE job computes every partition's row count
     # (metadata-grade aggregate), not a count() job per partition.
@@ -279,7 +282,12 @@ def compact_partitions(
         )
         part_rows = {r["__tok"]: r["count"] for r in counts}
 
-    def _compact_one(value: str, part_dir: str) -> tuple[int, int]:
+    # every rewritten partition is staged under one directory and swapped
+    # in by one journaled commit after the pool
+    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
+
+    def _compact_one(value: str, entry: str) -> tuple[int, int]:
+        part_dir = os.path.join(path, entry)
         files = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
         if rows_per_file is not None:
             n_rows = part_rows.get(value)
@@ -301,22 +309,16 @@ def compact_partitions(
             n_target = files_per_partition
             if len(files) <= n_target:
                 return len(files), len(files)
-        staging = f"{part_dir}.staging-{uuid.uuid4().hex[:8]}"
+        out = os.path.join(staging, entry)
         # repartition (round-robin) rather than coalesce: with n_rows >=
         # n_target every output partition is non-empty, so exactly
         # n_target files land — the deterministic-layout contract
         compact_swap_frame(spark, part_dir, n_target).write.mode(
             "overwrite"
-        ).parquet(staging)
-        old = f"{part_dir}.old-{uuid.uuid4().hex[:8]}"
-        os.rename(part_dir, old)
-        os.rename(staging, part_dir)
-        shutil.rmtree(old)
-        return len(files), len(
-            [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-        )
+        ).parquet(out)
+        return len(files), len([f for f in os.listdir(out) if f.endswith(".parquet")])
 
-    # per-partition rewrites are independent (each swaps its own
+    # per-partition rewrites are independent (each writes its own staged
     # directory), so submit them CONCURRENTLY — Spark's scheduler
     # interleaves the small jobs and wall-clock follows the largest
     # partition, not the partition count (30 sequential day jobs cost
@@ -342,57 +344,12 @@ def compact_partitions(
         for b, a in pool.map(lambda t: _compact_one(*t), targets):
             files_before += b
             files_after += a
+    if os.path.isdir(staging):
+        # the returned token is for a commit record; compaction changes
+        # the files, so a record the table holds goes stale, never wrong
+        commit.swap_partitions(staging, path, [])
     return {
         "partitions_compacted": len(targets),
         "files_before": files_before,
         "files_after": files_after,
     }
-
-
-def parquet_file_ranges(
-    path: str, key: str
-) -> list[tuple[str, object, object]]:
-    """Per-file (path, min, max) of ``key``, read from parquet FOOTER
-    statistics only — no data pages are touched, so cost is O(#files)
-    metadata reads regardless of table size. This is the vanilla-parquet
-    equivalent of the per-file stats a Delta/Iceberg transaction log
-    serves from its manifest: the pruning input for a file-level MERGE
-    (:func:`..sinks.upsert.upsert_file_pruned`).
-
-    Files without min/max stats for ``key`` report ``(path, None,
-    None)`` — callers must treat them as unprunable (always touched).
-    Flat (non-partitioned) directories only, matching
-    :func:`write_range_sorted` output. At cluster scale the per-footer
-    loop distributes trivially (one task per file); on the driver it is
-    the same O(#files) work a Delta log replay does.
-    """
-    import pyarrow.parquet as pq
-
-    out: list[tuple[str, object, object]] = []
-    for fname in sorted(os.listdir(path)):
-        if not fname.endswith(".parquet"):
-            continue
-        fp = os.path.join(path, fname)
-        md = pq.ParquetFile(fp).metadata
-        col_idx = next(
-            (
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == key
-            ),
-            None,
-        )
-        lo = hi = None
-        if col_idx is not None:
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                if st is None or not st.has_min_max:
-                    mins = []
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if mins:
-                lo, hi = min(mins), max(maxs)
-        out.append((fp, lo, hi))
-    return out

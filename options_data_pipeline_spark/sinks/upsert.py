@@ -6,28 +6,37 @@ src/pipeline/collectors/binance.py:76-125, deribit.py:83-137,
 aggregators/base.py:155-238). On a lakehouse the idiomatic equivalent is
 Delta `MERGE INTO`; this container ships vanilla Spark, so the same
 semantics are implemented by one merge core (:func:`_merge`) behind
-:func:`merge_upsert` and :func:`upsert_partitioned`:
+every keyed upsert — :func:`merge_upsert` (whole table),
+:func:`upsert_partitioned` (the touched partitions) and
+:func:`upsert_partitioned_moving` (the touched partitions plus the old
+partitions of keys that move):
 
-1. read the target — only the partitions the batch touches when the
-   table is partitioned on a column derived from the key, else all of
-   it — with the schema from the commit record, so no inference job runs;
+1. read the target — only the touched partitions when the table is
+   partitioned on the merge's partition column, else all of it — with
+   the schema from the commit record, so no inference job runs;
 2. reconcile with one aggregate over batch ∪ target grouped on the key
-   (a single shuffle): updates win over existing rows, and within the
-   batch the last row per key wins (deterministic via a priority +
-   monotonic batch order);
+   (:func:`merge_frame`, a single shuffle): updates win over existing
+   rows, and within the batch the last row per key wins (deterministic
+   via a priority + monotonic batch order);
 3. write the merged slice to ``<target>.staging-<uuid>`` in one job that
    also counts inserted/updated rows and takes the max of every
-   timestamp/date key column (an ``Observation``), then rename it into
-   place — the whole directory, or each touched partition directory;
-4. write the commit record (:mod:`.commit`) last.  Readers see the old
-   table or the new one, and reruns converge (T5 idempotence, SURVEY
-   §2.9).
+   timestamp/date key column (an ``Observation``), then swap it in
+   under one journal (:mod:`.commit`) — the whole directory, or each
+   touched partition directory, dropping a touched partition the slice
+   no longer holds;
+4. write the commit record last.  Readers see the old table or the new
+   one, a crashed swap is rolled forward by the next read, and reruns
+   converge (T5 idempotence, SURVEY §2.9).
+
+:func:`insert_if_absent` (``DO NOTHING``) and :func:`apply_cdc` (deletes)
+stage their writes the same way; the append moves its staged files in,
+the CDC apply swaps the whole table.
 
 Metrics mirror the reference's inserted/updated counters (binance.py
 RETURNING xmax trick): *inserted* = update keys absent from the target,
 *updated* = update keys already present.
 
-Cost: :func:`upsert_partitioned` rewrites the touched partitions, so a
+Cost: the partitioned shapes rewrite the touched partitions, so a
 micro-batch over a date-partitioned table costs O(batch), not O(table)
 (SURVEY §2.9 T2 lookback windows are hours-to-days, so the touched set
 stays tiny).  :func:`merge_upsert` rewrites the whole table; it is for
@@ -38,7 +47,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -47,74 +55,8 @@ from pyspark.sql.types import StructType
 from . import commit
 
 
-# Characters Spark escapes in partition directory names (Hive
-# FileUtils.escapePathName / Spark ExternalCatalogUtils.escapePathName —
-# public Spark source). Space and non-ASCII are NOT escaped; control
-# chars and this set become %XX uppercase hex.
-_PATH_ESCAPE_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
-
-_PENDING_DROPS = "_pending_drops.json"
-
 # Key columns whose max the commit record keeps (the watermark columns).
 _TIME_TYPES = ("timestamp", "timestamp_ntz", "date")
-
-
-def _escape_partition_value(spark: SparkSession, value) -> str:
-    """Render a partition VALUE exactly as Spark encodes it in the
-    directory name, so filesystem-level partition maintenance (drained-
-    partition drops) hits the directory Spark actually wrote.  ADVICE r8:
-    raw ``str(value)`` silently misses any value Spark escapes (':', '=',
-    '/', quotes, control chars) — stale rows then survive eviction.
-
-    Uses Spark's own JVM ``ExternalCatalogUtils.escapePathName`` when
-    reachable (bit-identical by construction), else a Python mirror of
-    the same public escape table."""
-    if value is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    if isinstance(value, bool):  # Spark renders booleans lowercase
-        s = "true" if value else "false"
-    else:
-        s = str(value)
-    try:
-        jvm = spark._jvm  # noqa: SLF001 — same-process JVM helper
-        return jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(  # noqa: E501
-            s
-        )
-    except Exception:  # pragma: no cover — JVM gateway unavailable
-        return "".join(
-            f"%{ord(ch):02X}" if (ch in _PATH_ESCAPE_CHARS or ch < " ") else ch
-            for ch in s
-        )
-
-
-def _complete_pending_drops(path: str) -> None:
-    """Finish partition drops a previous writer committed but did not
-    complete.  The sidecar is written AFTER the dynamic-overwrite commit
-    (so replaying it can never delete the only copy of a row) and removed
-    once the listed directories are gone; a crash in between leaves the
-    intent on disk and the next reader converges the table here."""
-    sidecar = os.path.join(path, _PENDING_DROPS)
-    if not os.path.exists(sidecar):
-        return
-    import json
-
-    with open(sidecar) as fh:
-        try:
-            drops = json.load(fh)
-        except ValueError as exc:
-            raise RuntimeError(
-                f"corrupt pending-drops sidecar {sidecar!r}: {exc}. The "
-                "writer journals this file atomically (temp + os.replace), "
-                "so a corrupt sidecar means external tampering or partial "
-                "copy; inspect the listed directories manually, then delete "
-                "the sidecar to unblock reads."
-            ) from exc
-    for dirname in drops:
-        # dir names are stored fully escaped; refuse to traverse
-        if os.sep in dirname or dirname in (".", ".."):
-            continue
-        shutil.rmtree(os.path.join(path, dirname), ignore_errors=True)
-    os.remove(sidecar)
 
 
 def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
@@ -135,9 +77,9 @@ def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
     the ``'_bid' in target.columns`` replay probe silently disable replay
     protection for stores migrated from pre-``_bid`` layouts.  Merging
     unions every footer's schema instead."""
+    commit.recover(path)
     if not os.path.exists(path):
         return None
-    _complete_pending_drops(path)
     rec = commit.read_record(path)
     if rec is not None:
         return spark.read.schema(rec["schema"]).parquet(path)
@@ -159,76 +101,19 @@ def _atomic_replace(df: DataFrame, path: str, partition_by: list[str] | None = N
     commit.swap_in(commit.stage(df, path, partition_by), path)
 
 
-def dedupe_last_wins(
+def merge_frame(
     updates: DataFrame,
+    current: DataFrame | None,
     keys: list[str],
     order_by: list[str] | None = None,
 ) -> DataFrame:
-    """In-batch last-wins dedup (reference: later statement wins).
-
-    ``order_by`` defines logical "later"; the fallback is physical order
-    via ``monotonically_increasing_id`` (deterministic only for
-    single-partition driver-built batches). Shared by the parquet
-    emulation and the Delta MERGE backend so both reconcile a batch
-    identically before touching the target."""
-    if order_by:
-        ordering = [F.col(c).desc() for c in order_by]
-        ordering.append(F.monotonically_increasing_id().desc())  # tie-break
-    else:
-        ordering = [F.monotonically_increasing_id().desc()]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    return (
-        updates.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def _merge(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    partition_by: list[str] | None = None,
-    scoped: bool = False,
-    touched: list | None = None,
-    audit_col: str | None = None,
-    order_by: list[str] | None = None,
-) -> dict[str, int]:
-    """The merge core behind :func:`merge_upsert` and
-    :func:`upsert_partitioned`: one shuffle and one write job per call.
-
-    With ``scoped`` (one partition column) only the partitions the batch
-    touches are read, merged and swapped in; ``touched`` lists them when
-    the caller already knows them (a superset is fine — the write
-    verifies it), otherwise one aggregate over the batch finds them.  A
-    first write, or a table laid out another way, is rewritten whole.
-
-    One aggregate over (batch ∪ target rows) grouped on the keys
-    reconciles them in a single shuffle: per key, ``max_by`` keeps the
-    row with the highest (from-batch, ``order_by``..., batch position) —
-    updates win over stored rows and the last batch row wins within the
-    batch, as :func:`dedupe_last_wins` orders them.  The inserted/updated
-    counts and the max of every timestamp/date key column ride the write
-    through an ``Observation``.  A batch that changes no row is a no-op
-    commit.  The commit record goes last."""
-    partition_by = list(partition_by or [])
-    raw = updates
-    if audit_col:
-        updates = updates.withColumn(audit_col, F.current_timestamp())
-    current = _read_target(spark, target_path)
-    rec = commit.read_record(target_path) if current is not None else None
-    part = partition_by[0] if scoped else None
-    hinted = touched is not None
-    if current is not None and scoped and commit.partition_columns(target_path, rec) == [part]:
-        # the token of the files just read: the new record's token builds on it
-        base = rec["token"] if rec else commit.snapshot(target_path)
-        if not hinted:
-            touched = [r[0] for r in updates.select(part).distinct().collect()]
-        current = current.where(F.col(part).isin(touched))
-    else:
-        scoped = False
-
+    """The merge core's reconcile: one aggregate over (batch ∪ stored
+    rows) grouped on the keys, a single shuffle.  Per key, ``max_by``
+    keeps the row with the highest (from-batch, ``order_by``..., batch
+    position): updates win over stored rows and the last batch row wins
+    within the batch.  Returns the batch's columns plus ``_u`` (a batch
+    row won) and ``_c`` (the key was stored) — module-level so the plan
+    audit pins the core's merged frame."""
     # Column expressions are built sparingly: each costs the Python side a
     # few JVM round trips, which at micro-batch size rival a Spark job
     cols = updates.columns
@@ -257,13 +142,57 @@ def _merge(
             for c in cols
         ])
         rows = rows.unionByName(tagged(stored, False))
-    merged = rows.groupBy(*keys).agg(
+    return rows.groupBy(*keys).agg(
         F.max_by("_v", "_p").alias("_v"),
         F.max("_p.u").alias("_u"),
         (~F.min("_p.u")).alias("_c"),
     ).select(*keys, "_v.*", "_u", "_c").select(*cols, "_u", "_c")
+
+
+def _merge(
+    spark: SparkSession,
+    target_path: str,
+    updates: DataFrame,
+    keys: list[str],
+    partition_by: list[str] | None = None,
+    scoped: bool = False,
+    touched: list | None = None,
+    audit_col: str | None = None,
+    order_by: list[str] | None = None,
+) -> dict[str, int]:
+    """The merge core behind every keyed upsert: one shuffle
+    (:func:`merge_frame`) and one write job per call.
+
+    With ``scoped`` (one partition column) only the partitions the batch
+    touches are read, merged and swapped in; ``touched`` lists them when
+    the caller already knows them (a superset is fine — the write
+    verifies it), otherwise one aggregate over the batch finds them.  A
+    touched partition the merged slice no longer holds (its keys moved
+    to other partitions) is dropped by the swap.  A first write, or a
+    table laid out another way, is rewritten whole.
+
+    The inserted/updated counts and the max of every timestamp/date key
+    column ride the write through an ``Observation``.  A batch that
+    changes no row is a no-op commit.  The commit record goes last."""
+    partition_by = list(partition_by or [])
+    raw = updates
+    if audit_col:
+        updates = updates.withColumn(audit_col, F.current_timestamp())
+    current = _read_target(spark, target_path)
+    rec = commit.read_record(target_path) if current is not None else None
+    part = partition_by[0] if scoped else None
+    if current is not None and scoped and commit.partition_columns(target_path, rec) == [part]:
+        # the token of the files just read: the new record's token builds on it
+        base = rec["token"] if rec else commit.snapshot(target_path)
+        if touched is None:
+            touched = [r[0] for r in raw.select(part).distinct().collect()]
+        current = current.where(F.col(part).isin(touched))
+    else:
+        scoped = False
+
+    merged = merge_frame(updates, current, keys, order_by)
     from_u, in_c = F.col("_u"), F.col("_c")
-    times = [n for n in keys if types[n] in _TIME_TYPES]
+    times = [n for n, t in updates.dtypes if n in keys and t in _TIME_TYPES]
     probes = [
         F.sum((from_u & in_c).cast("long")).alias("updated"),
         F.sum((from_u & ~in_c).cast("long")).alias("inserted"),
@@ -280,11 +209,14 @@ def _merge(
     counts = {"inserted": int(got["inserted"] or 0), "updated": int(got["updated"] or 0)}
     if scoped and got["outside"]:
         # the batch reaches partitions the scope missed: their rows were
-        # not read, so this slice must not be swapped in
+        # not read, so this slice must not be swapped in; merge again
+        # over the scope widened by the batch's own partitions
         shutil.rmtree(staging)
-        if not hinted:
+        more = [r[0] for r in raw.select(part).distinct().collect() if r[0] not in touched]
+        if not more:
             raise RuntimeError(f"{target_path}: partition values changed between reads")
-        return _merge(spark, target_path, raw, keys, partition_by, True, None, audit_col, order_by)
+        return _merge(spark, target_path, raw, keys, partition_by, True, touched + more,
+                      audit_col, order_by)
     if not counts["inserted"] + counts["updated"]:
         shutil.rmtree(staging)
         return counts
@@ -298,6 +230,10 @@ def _merge(
         for t, v in maxes.items():
             old = commit.record_max(rec, t) if rec else None
             maxes[t] = old if v is None or old is None else max(old, v)
+        # every touched partition is staged, an empty one when the slice
+        # no longer holds it: the swap drops that partition
+        for v in touched:
+            os.makedirs(os.path.join(staging, commit.partition_dir(part, v)), exist_ok=True)
     schema = StructType(fields + [out.schema[p] for p in partition_by])
     if scoped:
         token = commit.swap_partitions(staging, target_path, base)
@@ -337,6 +273,13 @@ def merge_upsert(
                   audit_col=audit_col, order_by=order_by)
 
 
+def first_occurrences(batch: DataFrame, keys: list[str]) -> DataFrame:
+    """In-batch dedup where the first occurrence of a key wins, as
+    ``ON CONFLICT DO NOTHING`` keeps the first."""
+    w = Window.partitionBy(*keys).orderBy(F.monotonically_increasing_id().asc())
+    return batch.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+
+
 def insert_if_absent(
     spark: SparkSession,
     target_path: str,
@@ -353,15 +296,8 @@ def insert_if_absent(
     files then move into the table.  A batch whose keys all exist
     commits nothing."""
     seen, kept = Observation(), Observation()
-    batch = batch.observe(seen, F.count(F.lit(1)).alias("n"))
-    # in-batch dedup: first occurrence wins (DO NOTHING keeps the first);
     # deduped-away rows count as skipped, like rowcount under DO NOTHING
-    w = Window.partitionBy(*keys).orderBy(F.monotonically_increasing_id().asc())
-    batch = (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    batch = first_occurrences(batch.observe(seen, F.count(F.lit(1)).alias("n")), keys)
     current = _read_target(spark, target_path)
     if current is None:
         _atomic_replace(batch.observe(kept, F.count(F.lit(1)).alias("n")), target_path)
@@ -428,22 +364,9 @@ def moving_probe_frame(
     ).join(F.broadcast(ukp), keys)
 
 
-def moving_merge_frame(
-    touched: DataFrame,
-    ukeys: DataFrame,
-    updates: DataFrame,
-    keys: list[str],
-) -> DataFrame:
-    """The move-aware MERGE's eviction + add: every row of an updated
-    key leaves the touched slice (old and new partition alike), then
-    the batch lands."""
-    survivors = touched.join(ukeys, keys, "left_anti")
-    return survivors.select(updates.columns).unionByName(updates)
-
-
 def af_sink_moving_upsert(spark: SparkSession, sf_dir: str, scratch: str):
     """Audit hook: a small target + a batch whose keys MOVE partitions;
-    the probe and merge frames are the sink's entire interior."""
+    the probe and the core's merged frame are the sink's interior."""
     t = f"{scratch}/mv"
     cur = spark.range(0, 500).select(
         F.col("id").alias("k"),
@@ -459,9 +382,8 @@ def af_sink_moving_upsert(spark: SparkSession, sf_dir: str, scratch: str):
     )
     ukp = updates.select("k", F.col("cell").alias("_new_part")).distinct()
     probe = moving_probe_frame(current, ukp, ["k"], "cell")
-    touched = current  # audit shape: the pruned slice has the same plan
-    merged = moving_merge_frame(touched, ukp.select("k"), updates, ["k"])
-    return {"probe": probe, "merge": merged}
+    # audit shape: the touched slice has the same plan as the whole table
+    return {"probe": probe, "merge": merge_frame(updates, current, ["k"])}
 
 
 def upsert_partitioned_moving(
@@ -470,33 +392,27 @@ def upsert_partitioned_moving(
     updates: DataFrame,
     keys: list[str],
     partition_col: str,
-    durable_staging: bool = False,
 ) -> dict[str, int]:
     """Partition-pruned MERGE for keys that MAY move between partitions.
-
-    ``durable_staging`` writes the merged slice to a recomputable
-    staging parquet directory instead of an eager ``localCheckpoint``,
-    whose blocks live only in executor storage (an executor loss then
-    fails the write; the dynamic overwrite is the one commit point
-    either way).
 
     :func:`upsert_partitioned` forbids cross-partition keys because its
     reconciliation only reads the updates' own partitions — a moved key
     would leave a stale row alive in its old partition.  Index
     maintenance breaks that invariant by construction: an updated vector
     re-assigns to a (possibly different) IVF cell, a re-bucketed record
-    changes shard.  This variant also reads the updated keys' OLD
-    partitions and evicts the stale rows there, so the maintained table
-    equals a full rebuild.
+    changes shard.  This shape also reads the updated keys' OLD
+    partitions, so the merge core keeps one row per key and the swap
+    drops a partition the moves drained: the maintained table equals a
+    full rebuild.
 
     Cost shape at 100 TB: finding the old partitions is a KEY-ONLY probe
-    — a column-pruned scan of ``(keys, partition_col)`` semi-joined to
-    the (broadcastable) update key set; the payload columns of untouched
-    partitions are never read, and the rewrite still covers only
-    old ∪ new partitions of the batch.  Production systems with stricter
-    budgets keep that two-column projection as a maintained sidecar
-    (key→partition map) — the probe below is exactly the query that
-    sidecar would serve.
+    — a column-pruned scan of ``(keys, partition_col)`` joined to the
+    (broadcast) update key set; the payload columns of untouched
+    partitions are never read, and the rewrite covers only old ∪ new
+    partitions of the batch.  Production systems with stricter budgets
+    keep that two-column projection as a maintained sidecar
+    (key→partition map) — the probe is exactly the query that sidecar
+    would serve.
 
     Returns ``{"inserted", "updated", "moved"}`` — *moved* counts
     updated keys whose partition changed (stale rows evicted).
@@ -507,268 +423,22 @@ def upsert_partitioned_moving(
             "cannot move — use upsert_partitioned (cheaper: no old-"
             "partition probe)."
         )
-    updates = updates.localCheckpoint(eager=False)
     current = _read_target(spark, target_path)
-    if current is None:
-        n = updates.count()
-        updates.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_path
-        )
-        return {"inserted": n, "updated": 0, "moved": 0}
-
-    # (keys, new partition) of the batch, deduped once — feeds the probe
-    # join AND the metrics aggregate
-    ukp = updates.select(
-        *keys, F.col(partition_col).alias("_new_part")
-    ).distinct().localCheckpoint(eager=False)
-    ukeys = ukp.select(*keys)
-    # key-only probe: column pruning reduces this scan to (keys, part).
-    # ONE aggregate over the probe yields updated count, moved count,
-    # and the set of old partitions — three jobs folded into one (the
-    # per-job overhead dominated this sink's latency on small batches;
-    # current's keys are unique by the upsert invariant, so plain
-    # counts ARE key counts)
-    old_locs = moving_probe_frame(current, ukp, keys, partition_col)
-    probe = old_locs.agg(
-        F.count(F.lit(1)).alias("updated"),
-        F.sum(
-            (F.col("_old_part") != F.col("_new_part")).cast("long")
-        ).alias("moved"),
-        F.collect_set("_old_part").alias("old_parts"),
-    ).collect()[0]
-    updated = int(probe["updated"] or 0)
-    moved = int(probe["moved"] or 0)
-    new_parts = [r[0] for r in ukp.select("_new_part").distinct().collect()]
-    parts = list(set(new_parts) | set(probe["old_parts"] or []))
-    inserted = ukp.count() - updated
-    touched = current.where(F.col(partition_col).isin(parts))
-    # evict EVERY row of an updated key from the touched slice (old and
-    # new partition alike), then add the batch
-    merged = moving_merge_frame(touched, ukeys, updates, keys)
-    # an eager localCheckpoint makes overwriting the path it read legal,
-    # two I/O passes of the slice cheaper than a staging round trip
-    staging = None
-    if durable_staging:
-        staging = commit.stage(merged, target_path)
-        staged = spark.read.parquet(staging)
-    else:
-        staged = merged.localCheckpoint()
-    staged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(partition_col).parquet(target_path)
-    # dynamic overwrite only touches partitions PRESENT in the write: a
-    # partition fully drained by evictions (its only rows moved away)
-    # would silently keep its stale files — drop those directories
-    # explicitly, encoding the value exactly as Spark escaped it in the
-    # dir name (ADVICE r8: raw str() misses ':', '=', '/', quotes…).
-    # The drop intent is journaled to a sidecar FIRST (post-commit, so
-    # replaying it is always safe — the moved rows are already in their
-    # new partitions) and cleared once done; a crash mid-drop leaves the
-    # sidecar and _read_target completes the drops before the next read,
-    # so stale drained rows cannot silently survive.
-    parts_after = {
-        r[0] for r in staged.select(partition_col).distinct().collect()
-    }
-    if staging is not None:
-        shutil.rmtree(staging, ignore_errors=True)
-    drained = [
-        f"{partition_col}={_escape_partition_value(spark, gone)}"
-        for gone in set(parts) - parts_after
-    ]
-    if drained:
-        import json
-
-        # written to a temp name and os.replace()d so a crash mid-write
-        # can never leave a truncated sidecar that poisons every later
-        # _read_target (ADVICE r9)
-        sidecar = os.path.join(target_path, _PENDING_DROPS)
-        tmp = f"{sidecar}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(sorted(drained), fh)
-        os.replace(tmp, sidecar)
-        _complete_pending_drops(target_path)
-    return {"inserted": inserted, "updated": updated, "moved": moved}
-
-
-def scd2_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_col: str = "is_current",
-) -> dict[str, int]:
-    """Type-2 slowly-changing-dimension MERGE: history is preserved.
-
-    Where :func:`merge_upsert` overwrites the matched row (type 1), this
-    closes it — the previously-current version gets ``valid_to`` = the
-    new version's timestamp and ``is_current`` = false — and opens the
-    new version. Multiple versions of a key inside one batch chain in
-    ``ts_col`` order (each row's ``valid_to`` is the next row's
-    ``valid_from``). Returns ``{"opened": n, "closed": m}``.
-
-    Scale: untouched keys are isolated with an anti join and rewritten
-    unchanged; only matched current rows join the (tiny) first-version
-    frame. On a lakehouse runtime this maps to the standard two-branch
-    Delta MERGE (match on key AND is_current -> update close; insert all
-    staged versions); see PERFORMANCE.md "MERGE sink".
-    """
-    w = Window.partitionBy(*keys).orderBy(F.col(ts_col).asc())
-    staged = (
-        updates.withColumn(valid_from, F.col(ts_col))
-        .withColumn(valid_to, F.lead(ts_col).over(w))
-        .withColumn(current_col, F.lead(ts_col).over(w).isNull())
-        .drop(ts_col)
-    )
-    opened = staged.count()
-    current = _read_target(spark, target_path)
-    if current is None:
-        _atomic_replace(staged, target_path)
-        return {"opened": opened, "closed": 0}
-
-    firsts = staged.groupBy(*keys).agg(F.min(valid_from).alias("__new_from"))
-    open_rows = current.where(F.col(current_col))
-    closing = (
-        open_rows.join(F.broadcast(firsts), keys)
-        .withColumn(valid_to, F.col("__new_from"))
-        .withColumn(current_col, F.lit(False))
-        .drop("__new_from")
-    )
-    closed = closing.count()
-    untouched = current.join(F.broadcast(firsts.select(*keys)), keys, "left_anti")
-    closed_history = current.where(~F.col(current_col)).join(
-        F.broadcast(firsts.select(*keys)), keys, "left_semi"
-    )
-    merged = (
-        untouched.select(staged.columns)
-        .unionByName(closed_history.select(staged.columns))
-        .unionByName(closing.select(staged.columns))
-        .unionByName(staged)
-    )
-    _atomic_replace(merged, target_path)
-    return {"opened": opened, "closed": closed}
-
-
-def upsert_file_pruned(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    range_key: str,
-    audit_col: str | None = None,
-) -> dict[str, int]:
-    """FILE-level MERGE: rewrite only the parquet files whose footer
-    min/max range on ``range_key`` intersects the update batch's keys —
-    every other file is left byte-for-byte untouched on disk.
-
-    This is the no-Delta answer to reference K1 per-key upserts
-    (reference src/pipeline/collectors/binance.py:76-125) at 100 TB:
-    where :func:`upsert_partitioned` prunes at PARTITION granularity
-    (days), this prunes at file granularity within a range-clustered
-    table (:func:`..sinks.layout.write_range_sorted` keeps per-file
-    ranges disjoint and tight). An hourly batch against a year of data
-    rewrites a handful of files, not a day partition. ``range_key``
-    must be one of ``keys`` (or functionally determined by them) so a
-    merged key can never live outside the file ranges being rewritten.
-
-    Mechanics: footer stats (:func:`..sinks.layout.parquet_file_ranges`)
-    -> broadcast range-join against the batch's distinct ``range_key``
-    values -> read ONLY intersecting files -> latest-wins reconcile ->
-    write the merged slice to staging -> swap those files in place.
-    Files with missing stats are always treated as touched. The
-    delete+move swap is per-file, not one atomic directory rename; a
-    production deployment commits the same file list through a
-    Delta/Iceberg manifest instead (see PERFORMANCE.md MERGE note).
-    Returns ``{"inserted": n, "updated": m, "files_rewritten": t,
-    "files_untouched": u}``.
-    """
-    if range_key not in keys:
-        raise ValueError(
-            f"range_key {range_key!r} must be one of keys {keys}: pruning "
-            "by a non-key range could leave a merged key's stale row "
-            "alive in an unread file."
-        )
-    if audit_col:
-        updates = updates.withColumn(audit_col, F.current_timestamp())
-    current = _read_target(spark, target_path)
-    if current is None:
-        n = updates.count()
-        _atomic_replace(updates, target_path)
-        return {
-            "inserted": n,
-            "updated": 0,
-            "files_rewritten": 0,
-            "files_untouched": 0,
-        }
-
-    from .layout import parquet_file_ranges
-
-    ranges = parquet_file_ranges(target_path, range_key)
-    unprunable = [f for f, lo, _ in ranges if lo is None]
-    prunable = [(f, lo, hi) for f, lo, hi in ranges if lo is not None]
-    touched = set(unprunable)
-    if prunable:
-        rng = spark.createDataFrame(prunable, ["_file", "_lo", "_hi"])
-        kvals = updates.select(F.col(range_key).alias("_k")).distinct()
-        hits = (
-            kvals.join(
-                F.broadcast(rng),
-                (F.col("_k") >= F.col("_lo")) & (F.col("_k") <= F.col("_hi")),
-            )
-            .select("_file")
-            .distinct()
-            .collect()
-        )
-        touched |= {r._file for r in hits}
-
-    total = updates.count()
-    if not touched:
-        # pure insert outside every existing range: new file(s) only
-        updates.select(current.columns).write.mode("append").parquet(
-            target_path
-        )
-        return {
-            "inserted": total,
-            "updated": 0,
-            "files_rewritten": 0,
-            "files_untouched": len(ranges),
-        }
-
-    touched_df = spark.read.parquet(*sorted(touched))
-    if audit_col and audit_col not in touched_df.columns:
-        touched_df = touched_df.withColumn(
-            audit_col, F.lit(None).cast("timestamp")
-        )
-    updated = updates.join(
-        touched_df.select(*keys).distinct(), keys, "left_semi"
-    ).count()
-    survivors = touched_df.join(updates.select(*keys), keys, "left_anti")
-    merged = survivors.select(updates.columns).unionByName(updates)
-
-    # stage the merged slice (sorted on the range key so the replacement
-    # files carry tight footer stats again), then swap per-file
-    staging = f"{target_path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.sortWithinPartitions(range_key).write.mode("overwrite").parquet(
-        staging
-    )
-    for f in touched:
-        os.remove(f)
-    tag = uuid.uuid4().hex[:8]
-    for i, fname in enumerate(sorted(os.listdir(staging))):
-        if fname.endswith(".parquet"):
-            shutil.move(
-                os.path.join(staging, fname),
-                os.path.join(target_path, f"part-merge-{tag}-{i:05d}.parquet"),
-            )
-    shutil.rmtree(staging)
-    return {
-        "inserted": total - updated,
-        "updated": updated,
-        "files_rewritten": len(touched),
-        "files_untouched": len(ranges) - len(touched),
-    }
+    moved, touched = 0, None
+    if current is not None:
+        ukp = updates.select(*keys, F.col(partition_col).alias("_new_part")).distinct()
+        # one aggregate over the probe: the moved count and the old
+        # partitions (current's keys are unique, so rows are keys)
+        probe = moving_probe_frame(current, ukp, keys, partition_col).agg(
+            F.sum((F.col("_old_part") != F.col("_new_part")).cast("long")).alias("moved"),
+            F.collect_set("_old_part").alias("old"),
+        ).first()
+        moved = int(probe["moved"] or 0)
+        new = [r[0] for r in ukp.select("_new_part").distinct().collect()]
+        touched = list(set(probe["old"]) | set(new))
+    counts = _merge(spark, target_path, updates, keys, [partition_col],
+                    scoped=True, touched=touched)
+    return {**counts, "moved": moved}
 
 
 def apply_cdc(

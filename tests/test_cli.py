@@ -31,24 +31,6 @@ def test_cli_run_json_lines(spark, capsys):
     assert lines and all("instrument" in r for r in lines)
 
 
-def test_cli_table_history_and_read(spark, tmp_path, capsys):
-    import json as _json
-
-    from options_data_pipeline_spark.sinks.versioned import commit_write
-
-    t = str(tmp_path / "tbl")
-    commit_write(
-        spark.createDataFrame([(1, "a")], "k long, v string"), t
-    )
-    assert main(["table", "history", t]) == 0
-    entry = _json.loads(capsys.readouterr().out.strip())
-    assert entry["version"] == 0 and entry["count"] == 1
-
-    assert main(["table", "read", t]) == 0
-    row = _json.loads(capsys.readouterr().out.strip())
-    assert row == {"k": 1, "v": "a"}
-
-
 def test_cli_sql_adhoc(spark, capsys):
     import json
 

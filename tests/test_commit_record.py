@@ -14,6 +14,7 @@ from __future__ import annotations
 import itertools
 import json
 import os
+import shutil
 from datetime import datetime, timedelta
 
 import pytest
@@ -254,6 +255,163 @@ def test_backfill_after_sync_keeps_the_day_layout(spark, tmp_path):
     names = [n for n in os.listdir(t) if not n.startswith(("_", "."))]
     assert names and all(n.startswith("bucket_date=") for n in names), names
     assert high_watermark(spark, t, "bucket_ts") == T0 + timedelta(hours=30)
+
+
+@pytest.mark.parametrize("fresh", ["absent", "empty_dir"])
+def test_backfill_into_a_fresh_table_lays_it_out_by_day(spark, tmp_path, fresh):
+    """A backfill that creates its table lays it out by day, as the sync
+    does, so the next sync rewrites only the days it fetched instead of
+    the whole table; insert-if-absent's first occurrence still wins.  A
+    directory that holds no data is a fresh table too."""
+    t = str(tmp_path / "t")
+    if fresh == "empty_dir":
+        os.makedirs(t)
+    keys = ["instrument", "bucket_ts"]
+    # three days of history in two pages; the first page repeats hour -40
+    # (its first occurrence wins), the second overlaps the first's tail
+    first = _rows(spark, range(-68, -34), price=9.0).union(_rows(spark, [-40], price=50.0))
+    second = _rows(spark, range(-36, 0), price=70.0)
+    mid = T0 - timedelta(hours=34)
+
+    def fetch_page(cursor, end):
+        return (first, mid) if cursor < mid else (second, None)
+
+    m = backfill(spark, fetch_page, t, keys=keys, start=T0 - timedelta(hours=68), end=T0)
+    assert m == {"pages": 2, "inserted": 2 * 68}
+    names = [n for n in os.listdir(t) if not n.startswith(("_", "."))]
+    assert sorted(names) == [
+        "bucket_date=2024-02-28", "bucket_date=2024-02-29", "bucket_date=2024-03-01",
+    ]
+    before = commit.snapshot(t)
+
+    fetch = _fetcher(spark, [[-2, -1, 0, 1, 5]])
+    assert _sync(spark, t, fetch, 0) == {"fetched": 10, "inserted": 6, "updated": 4}
+    want = {(i, h): 9.0 + h for i in "AB" for h in range(-68, -34)}
+    want.update({(i, h): 70.0 + h for i in "AB" for h in range(-34, -2)})
+    want.update({(i, h): 1.0 + h for i in "AB" for h in (-2, -1, 0, 1, 5)})
+    assert _table(spark, t) == sorted(
+        (i, T0 + timedelta(hours=h), c, (T0 + timedelta(hours=h)).date())
+        for (i, h), c in want.items()
+    )
+    names = [n for n in os.listdir(t) if not n.startswith(("_", "."))]
+    assert all(n.startswith("bucket_date=") for n in names), names
+    # the days the sync did not fetch keep their files
+    after = commit.snapshot(t)
+
+    def files(token, day):
+        return [e for e in token if e[0].startswith(f"bucket_date={day}{os.sep}")]
+
+    for day in ("2024-02-28", "2024-02-29"):
+        assert files(before, day) and files(after, day) == files(before, day)
+    assert files(after, "2024-03-01") != files(before, "2024-03-01")
+    assert files(after, "2024-03-02")
+
+
+MOVES = "k long, v string, cell string"
+# k=3 moves c1 -> c0 and drains c1; k=2 and k=4 land in the new c2
+BASE = [(1, "a", "c0"), (2, "b", "c0"), (3, "c", "c1")]
+BATCH = [(2, "B", "c2"), (3, "C", "c0"), (4, "d", "c2"), (1, "A", "c0")]
+NEXT = [(4, "D", "c1"), (5, "e", "c0")]
+
+
+def _moving(spark, t, rows):
+    return upsert_partitioned_moving(
+        spark, t, spark.createDataFrame(rows, MOVES), ["k"], "cell")
+
+
+def _cells(df):
+    return sorted(tuple(r) for r in df.select("k", "v", "cell").collect())
+
+
+def _partitions(t):
+    return sorted(n for n in os.listdir(t) if not n.startswith(("_", ".")))
+
+
+@pytest.mark.parametrize(
+    "point", ["between_renames", "before_drops", "before_journal_removed"])
+def test_crash_in_partition_swap_rolls_forward(spark, tmp_path, monkeypatch, point):
+    """A crash anywhere in the journaled partition swap: the next read
+    rolls it forward to the table a clean run leaves, with no partition
+    missing or held twice, and the commit record is stale, not wrong."""
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for t in (clean, crashed):
+        _moving(spark, t, BASE)
+    _moving(spark, clean, BATCH)
+    rename, rmtree = os.rename, shutil.rmtree
+
+    def crashing_rename(src, dst):
+        if point == "between_renames" and ".staging-" in src and src.endswith("cell=c0"):
+            raise OSError("injected: old c0 moved out, the new one not in")
+        if point == "before_drops" and src == os.path.join(crashed, "cell=c1"):
+            raise OSError("injected: swaps done, drained c1 not dropped")
+        return rename(src, dst)
+
+    def crashing_rmtree(path, *a, **kw):
+        if point == "before_journal_removed" and ".staging-" in path:
+            raise OSError("injected: swaps and drops done, journal kept")
+        return rmtree(path, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    monkeypatch.setattr(shutil, "rmtree", crashing_rmtree)
+    with pytest.raises(OSError, match="injected"):
+        _moving(spark, crashed, BATCH)
+    monkeypatch.undo()
+    assert os.path.exists(f"{crashed}.swap.json")
+    assert commit.read_record(crashed) is None
+    if point == "between_renames":
+        assert "cell=c0" not in _partitions(crashed)  # the window the journal closes
+
+    assert _cells(_read_target(spark, crashed)) == _cells(spark.read.parquet(clean))
+    assert _partitions(crashed) == _partitions(clean)
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("crashed.")]
+    assert commit.read_record(crashed) is None
+    # the next sink call converges and commits a current record again
+    assert _moving(spark, crashed, NEXT) == _moving(spark, clean, NEXT)
+    assert _cells(spark.read.parquet(crashed)) == _cells(spark.read.parquet(clean))
+    assert commit.read_record(crashed) is not None
+
+
+@pytest.mark.parametrize("heal", ["read", "backfill"])
+def test_crash_in_whole_table_swap_rolls_forward(spark, tmp_path, monkeypatch, heal):
+    """The whole-table swap is journaled too: a crash after the old table
+    is moved out and before the staged one is in leaves no table at the
+    path, and the next read puts the new one (with its record) in place
+    instead of cold-starting.  A backfill page after the crash finds the
+    recovered table, not a fresh one: stored keys keep their rows (DO
+    NOTHING) and the flat table stays flat."""
+    keys = ["instrument", "bucket_ts"]
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for t in (clean, crashed):
+        merge_upsert(spark, t, _rows(spark, [0, 1]), keys)
+    merge_upsert(spark, clean, _rows(spark, [1, 2], price=9.0), keys)
+    rename = os.rename
+
+    def crashing_rename(src, dst):
+        if ".staging-" in src:
+            raise OSError("injected: old table moved out, the new one not in")
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="injected"):
+        merge_upsert(spark, crashed, _rows(spark, [1, 2], price=9.0), keys)
+    monkeypatch.undo()
+    assert not os.path.exists(crashed)
+    if heal == "backfill":
+        page = _rows(spark, [1, 2, 3], price=5.0)
+        for t in (clean, crashed):
+            m = backfill(spark, lambda cursor, end: (page, None), t, keys=keys,
+                         start=T0, end=T0 + timedelta(hours=4))
+            assert m == {"pages": 1, "inserted": 2}
+        assert commit.partition_columns(crashed) == []
+        assert sorted(tuple(r) for r in spark.read.parquet(crashed).collect()) == sorted(
+            (i, T0 + timedelta(hours=h), c)
+            for i in "AB" for h, c in ((0, 1.0), (1, 10.0), (2, 11.0), (3, 8.0))
+        )
+    assert sorted(_read_target(spark, crashed).collect()) == sorted(
+        spark.read.parquet(clean).collect())
+    if heal == "read":
+        assert commit.read_record(crashed) is not None
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("crashed.")]
 
 
 def test_crash_in_whole_table_commit_keeps_old_table(spark, tmp_path, monkeypatch):

@@ -81,6 +81,42 @@ def test_compact_partitions_reduces_files_keeps_content(spark, tmp):
     assert rows_after == rows_before
 
 
+def test_compact_partitions_crash_in_swap_rolls_forward(spark, tmp, monkeypatch):
+    """Compaction commits every rewritten partition in one journaled
+    swap: a crash between one partition's two renames leaves it missing
+    from the table, and the next compaction rolls the swap forward first
+    — every partition compacted, no row lost or doubled, nothing staged
+    left behind."""
+    t = f"{tmp}/t"
+    df = spark.createDataFrame(
+        [(i, f"d{i % 2}", float(i)) for i in range(100)], "k long, d string, v double"
+    )
+    df.repartition(8).write.partitionBy("d").mode("overwrite").parquet(t)
+    rows_before = sorted(tuple(r) for r in spark.read.parquet(t).select("k", "d", "v").collect())
+    rename, staged = os.rename, []
+
+    def crashing_rename(src, dst):
+        if ".staging-" in src:
+            staged.append(src)
+            if len(staged) == 2:
+                raise OSError("injected: second partition moved out, not in")
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_partitions(spark, t, "d", files_per_partition=1)
+    monkeypatch.undo()
+    assert [n for n in os.listdir(t) if not n.startswith(("_", "."))] == ["d=d0"]
+
+    metrics = compact_partitions(spark, t, "d", files_per_partition=1)
+    assert metrics == {"partitions_compacted": 2, "files_before": 2, "files_after": 2}
+    for d in ("d=d0", "d=d1"):
+        assert len([f for f in os.listdir(os.path.join(t, d)) if f.endswith(".parquet")]) == 1
+    rows_after = sorted(tuple(r) for r in spark.read.parquet(t).select("k", "d", "v").collect())
+    assert rows_after == rows_before
+    assert sorted(os.listdir(tmp)) == ["t"]
+
+
 def test_delta_only_partition_starts_at_one_file(spark, tmp):
     """ADVICE r11 (low): a slot populated ONLY by the appended delta
     physically has one file before compaction (the init write never
@@ -325,104 +361,6 @@ def test_write_zordered_prunes_both_dimensions(spark, tmp):
     # whereas the 1-D sort leaves the second dimension unpruned
     assert hit_fraction(s_out, "event_id", mid_id) <= 0.2
     assert hit_fraction(s_out, "user_id", mid_user) >= 0.9
-
-
-# --- file-level MERGE (footer-stats pruning) --------------------------------
-
-
-def _md5s(path):
-    import hashlib
-
-    return {
-        f: hashlib.md5(open(os.path.join(path, f), "rb").read()).hexdigest()
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    }
-
-
-def test_parquet_file_ranges_footer_stats(spark, tmp):
-    from options_data_pipeline_spark.sinks.layout import parquet_file_ranges
-
-    df = spark.range(0, 800).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    out = f"{tmp}/ranged"
-    write_range_sorted(df, out, ["k"], num_files=8)
-    ranges = parquet_file_ranges(out, "k")
-    assert len(ranges) == 8
-    assert all(lo is not None for _, lo, _ in ranges)
-    # disjoint and covering 0..799
-    spans = sorted((lo, hi) for _, lo, hi in ranges)
-    assert spans[0][0] == 0 and spans[-1][1] == 799
-    for (lo1, hi1), (lo2, _) in zip(spans, spans[1:]):
-        assert hi1 < lo2
-
-
-def test_upsert_file_pruned_leaves_untouched_files_byte_identical(spark, tmp):
-    from options_data_pipeline_spark.sinks.upsert import upsert_file_pruned
-
-    base = spark.range(0, 800).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    out = f"{tmp}/merge_target"
-    write_range_sorted(base, out, ["k"], num_files=8)
-    before = _md5s(out)
-
-    # batch touches a narrow key range (two files' worth at most) plus
-    # brand-new keys beyond every existing range
-    updates = spark.createDataFrame(
-        [(10, -10), (11, -11), (55, -55), (900, -900)], ["k", "v"]
-    )
-    stats = upsert_file_pruned(spark, out, updates, keys=["k"], range_key="k")
-
-    assert stats["updated"] == 3 and stats["inserted"] == 1
-    assert 1 <= stats["files_rewritten"] <= 2
-    assert stats["files_rewritten"] + stats["files_untouched"] == 8
-
-    after = _md5s(out)
-    untouched_before = {
-        f: h for f, h in before.items() if f in after and after[f] == h
-    }
-    # every file the merge did not rewrite is literally the same bytes
-    assert len(untouched_before) == 8 - stats["files_rewritten"]
-
-    # merged content == naive latest-wins merge
-    got = {(r.k, r.v) for r in spark.read.parquet(out).collect()}
-    want = {(k, k * 2) for k in range(800) if k not in (10, 11, 55)}
-    want |= {(10, -10), (11, -11), (55, -55), (900, -900)}
-    assert got == want
-
-
-def test_upsert_file_pruned_pure_insert_appends_only(spark, tmp):
-    from options_data_pipeline_spark.sinks.upsert import upsert_file_pruned
-
-    base = spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    out = f"{tmp}/insert_target"
-    write_range_sorted(base, out, ["k"], num_files=4)
-    before = _md5s(out)
-
-    updates = spark.createDataFrame([(500, 1), (501, 2)], ["k", "v"])
-    stats = upsert_file_pruned(spark, out, updates, keys=["k"], range_key="k")
-    assert stats == {
-        "inserted": 2,
-        "updated": 0,
-        "files_rewritten": 0,
-        "files_untouched": 4,
-    }
-    after = _md5s(out)
-    assert all(after[f] == h for f, h in before.items())
-    assert spark.read.parquet(out).count() == 102
-
-
-def test_upsert_file_pruned_requires_range_key_in_keys(spark, tmp):
-    from options_data_pipeline_spark.sinks.upsert import upsert_file_pruned
-
-    with pytest.raises(ValueError):
-        upsert_file_pruned(
-            spark, f"{tmp}/x", spark.range(1), keys=["id"], range_key="other"
-        )
 
 
 def test_write_zordered_three_dimensions(spark, tmp):

@@ -117,12 +117,10 @@ def test_upsert_partitioned(spark, tmp):
 
 
 def test_upsert_partitioned_durable_staging_identical(spark, tmp):
-    """VERDICT r14 ask #8: the durable-staging opt-in (recomputable
-    staging parquet instead of the executor-block localCheckpoint) of
-    the move-aware variant must produce a store IDENTICAL to the default
-    path, leave no staging directory behind, and report the same
-    metrics.  The in-place MERGE always stages its slice in parquet: its
-    one run must report the metrics and leave no staging directory."""
+    """Both partitioned MERGEs stage their slice in parquet and swap it
+    in: each run must report the metrics, leave exactly the merged rows
+    and leave no staging directory behind — the move-aware one too,
+    including a partition its moves drain."""
     import os
 
     from options_data_pipeline_spark.sinks.upsert import (
@@ -141,24 +139,17 @@ def test_upsert_partitioned_durable_staging_identical(spark, tmp):
     }
     assert not [e for e in os.listdir(tmp) if ".staging-" in e]
 
-    mv_rows = [(1, "a", "c0"), (2, "b", "c1")]
-    mv_up = [(2, "B", "c2"), (3, "c", "c0")]  # k=2 moves, draining c1
-    mstores = {}
-    for tag, durable in (("fast", False), ("durable", True)):
-        t = f"{tmp}/m_{tag}"
-        base = spark.createDataFrame(mv_rows, "k long, v string, cell string")
-        upsert_partitioned_moving(spark, t, base, ["k"], "cell")
-        up = spark.createDataFrame(mv_up, "k long, v string, cell string")
-        m = upsert_partitioned_moving(
-            spark, t, up, ["k"], "cell", durable_staging=durable
-        )
-        assert m == {"inserted": 1, "updated": 1, "moved": 1}
-        mstores[tag] = {
-            (r.k, r.v, r.cell) for r in spark.read.parquet(t).collect()
-        }
-        parent = os.path.dirname(t)
-        assert not [e for e in os.listdir(parent) if ".staging-" in e]
-    assert mstores["fast"] == mstores["durable"]
+    t = f"{tmp}/m"
+    base = spark.createDataFrame([(1, "a", "c0"), (2, "b", "c1")], "k long, v string, cell string")
+    upsert_partitioned_moving(spark, t, base, ["k"], "cell")
+    # k=2 moves, draining c1
+    up = spark.createDataFrame([(2, "B", "c2"), (3, "c", "c0")], "k long, v string, cell string")
+    m = upsert_partitioned_moving(spark, t, up, ["k"], "cell")
+    assert m == {"inserted": 1, "updated": 1, "moved": 1}
+    assert {(r.k, r.v, r.cell) for r in spark.read.parquet(t).collect()} == {
+        (1, "a", "c0"), (2, "B", "c2"), (3, "c", "c0"),
+    }
+    assert not [e for e in os.listdir(tmp) if ".staging-" in e]
 
 
 def test_upsert_partitioned_rejects_movable_keys(spark, tmp):
@@ -530,52 +521,6 @@ def test_interval_join_streams(spark, tmp):
     assert {(r.l_event_id, r.r_event_id) for r in batch.collect()} == {(20, 10)}
 
 
-def test_scd2_upsert_history_chain(spark, tmp):
-    from options_data_pipeline_spark.sinks.upsert import scd2_upsert
-
-    t = f"{tmp}/dim"
-    b1 = spark.createDataFrame(
-        [(1, "bronze", "2024-01-01 00:00:00"), (2, "gold", "2024-01-01 00:00:00")],
-        "k long, tier string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    m1 = scd2_upsert(spark, t, b1, ["k"])
-    assert m1 == {"opened": 2, "closed": 0}
-
-    # key 1 changes twice within one batch (versions must chain); key 3 is new
-    b2 = spark.createDataFrame(
-        [
-            (1, "silver", "2024-02-01 00:00:00"),
-            (1, "gold", "2024-03-01 00:00:00"),
-            (3, "bronze", "2024-02-15 00:00:00"),
-        ],
-        "k long, tier string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    m2 = scd2_upsert(spark, t, b2, ["k"])
-    assert m2 == {"opened": 3, "closed": 1}
-
-    rows = {
-        (r.k, r.tier, str(r.valid_from), str(r.valid_to), r.is_current)
-        for r in spark.read.parquet(t).collect()
-    }
-    assert rows == {
-        (1, "bronze", "2024-01-01 00:00:00", "2024-02-01 00:00:00", False),
-        (1, "silver", "2024-02-01 00:00:00", "2024-03-01 00:00:00", False),
-        (1, "gold", "2024-03-01 00:00:00", "None", True),
-        (2, "gold", "2024-01-01 00:00:00", "None", True),
-        (3, "bronze", "2024-02-15 00:00:00", "None", True),
-    }
-
-    # idempotence-of-history: an unrelated third batch leaves closed rows alone
-    b3 = spark.createDataFrame(
-        [(2, "platinum", "2024-04-01 00:00:00")], "k long, tier string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    m3 = scd2_upsert(spark, t, b3, ["k"])
-    assert m3 == {"opened": 1, "closed": 1}
-    out = spark.read.parquet(t)
-    assert out.count() == 6
-    assert out.where(F.col("is_current")).count() == 3
-
-
 def test_streaming_session_windows(spark, tmp):
     """Native session_window sessionization: two sessions for user A
     (gap > 30 min between event 2 and 3), one for user B; a second
@@ -697,30 +642,39 @@ def test_upsert_partitioned_moving_escaped_partition_values(spark, tmp):
     assert "cell=c%3A0" not in os.listdir(t)
 
 
-def test_pending_drops_sidecar_heals_on_next_read(spark, tmp):
-    """A crash between the dynamic-overwrite commit and the drained-dir
-    drops leaves the journaled intent on disk; the next _read_target
-    completes the drops before reading, so stale drained rows cannot
+def test_swap_journal_heals_on_next_read(spark, tmp, monkeypatch):
+    """A crash between the partition swaps and the drained-partition
+    drop leaves the journaled intent on disk; the next _read_target
+    rolls it forward before reading, so stale drained rows cannot
     survive a crash window."""
-    import json
     import os
 
     from options_data_pipeline_spark.sinks.upsert import (
-        _PENDING_DROPS,
         _read_target,
+        upsert_partitioned_moving,
     )
 
     t = f"{tmp}/t"
     df = spark.createDataFrame(
         [(1, "live", "d1"), (2, "stale", "d0")], "k long, v string, d string"
     )
-    df.write.partitionBy("d").parquet(t)
-    # simulate the post-commit crash: the drop intent exists, the dir too
-    with open(os.path.join(t, _PENDING_DROPS), "w") as fh:
-        json.dump(["d=d0"], fh)
+    upsert_partitioned_moving(spark, t, df, ["k"], "d")
+    rename = os.rename
+
+    def crash_on_drop(src, dst):
+        if src == os.path.join(t, "d=d0"):
+            raise OSError("injected: crash before the drained-partition drop")
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_drop)
+    moved = spark.createDataFrame([(2, "moved", "d1")], "k long, v string, d string")
+    with pytest.raises(OSError, match="injected"):
+        upsert_partitioned_moving(spark, t, moved, ["k"], "d")
+    monkeypatch.undo()
+    assert "d=d0" in os.listdir(t) and os.path.exists(f"{t}.swap.json")
     healed = _read_target(spark, t)
-    assert {(r.k, r.v) for r in healed.collect()} == {(1, "live")}
-    assert not os.path.exists(os.path.join(t, _PENDING_DROPS))
+    assert sorted((r.k, r.v) for r in healed.collect()) == [(1, "live"), (2, "moved")]
+    assert not os.path.exists(f"{t}.swap.json")
     assert "d=d0" not in os.listdir(t)
 
 
