@@ -34,9 +34,9 @@ def curate_corpus(
 ) -> dict:
     """Run the full curation pipeline over the ``documents`` table and
     write training shards to ``out_path``. Returns run metrics."""
+    from ..operators.packing import write_token_shards
     from ..operators.pii import detect_pii, redact_pii
     from ..operators.textstats import quality_score
-    from ..sinks.layout import write_token_shards
     from ..sources.tables import load_table
     from ..plans.text import q_cluster_survivors, q_dedup_clusters
 

@@ -30,6 +30,7 @@ from ..functions.timeutil import utc_now
 from ..operators.gaps import detect_gaps
 from ..sinks import commit
 from ..sinks.upsert import (
+    _read_target,
     first_occurrences,
     insert_if_absent,
     merge_upsert,
@@ -45,15 +46,21 @@ DAY_COL = "bucket_date"
 def high_watermark(spark: SparkSession, target_path: str, ts_col: str):
     """S7 probe: MAX(ts) of the target table, or None when absent.
 
-    Free when the table's commit record is current and holds the max
-    (the merge took it while writing); otherwise one scan, whose result
-    is kept in the record for the next probe."""
+    A swap a crashed writer left journaled is rolled forward first, so
+    the probe sees the table the next sink call would.  Free when the
+    table's commit record is current and holds the max (the merge took
+    it while writing); otherwise one scan, read as the sinks read the
+    table, whose result is kept in the record for the next probe."""
+    commit.recover(target_path)
     if not os.path.exists(target_path):
         return None
     rec = commit.read_record(target_path)
     if rec is not None and commit.record_max(rec, ts_col) is not None:
         return commit.record_max(rec, ts_col)
-    wm = spark.read.parquet(target_path).agg(F.max(ts_col)).first()[0]
+    current = _read_target(spark, target_path)
+    if current is None:
+        return None
+    wm = current.agg(F.max(ts_col)).first()[0]
     if rec is not None:
         commit.remember_max(target_path, rec, ts_col, wm)
     return wm

@@ -97,6 +97,33 @@ def pack_token_shards(
     )
 
 
+def write_token_shards(
+    docs: DataFrame,
+    path: str,
+    budget: int,
+    lang_col: str = "lang",
+    id_col: str = "doc_id",
+    segment_width: int = 4096,
+) -> None:
+    """Export ``docs`` as training shards: one parquet partition per
+    (lang, shard_id) where consecutive docs fill a ``budget``-token
+    shard (assignment from :func:`pack_token_shards` — the two-level
+    distributed prefix sum, no per-language bottleneck).
+    Repartitioning by the shard key before the write gives one task —
+    hence one file — per shard, which is exactly the unit a training
+    job schedules."""
+    packed = pack_token_shards(
+        docs, budget, lang_col=lang_col, id_col=id_col, segment_width=segment_width
+    )
+    (
+        packed.repartition(F.col(lang_col), F.col("shard_id"))
+        .sortWithinPartitions(id_col)
+        .write.mode("overwrite")
+        .partitionBy(lang_col, "shard_id")
+        .parquet(path)
+    )
+
+
 def greedy_sequence_pack(
     docs: DataFrame,
     *,

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.commit import snapshot
+from ..sinks.commit import recover, snapshot
 
 TABLES = (
     "region",
@@ -57,7 +57,8 @@ _TABLE_CACHE: dict[tuple[str, str, str], tuple[list, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one benchmark table, normalizing event-time columns."""
+    """Read one benchmark table, normalizing event-time columns.  A swap
+    a crashed sink left journaled on the table is rolled forward first."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     # Re-pin session invariants on EVERY access, not just cache misses:
     # the NTZ->TIMESTAMP cast embedded in a cached plan is evaluated with
@@ -65,6 +66,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the conf between queries would silently shift cached tables' values.
     ensure_session_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
+    recover(path)
     token = snapshot(path)
     cached = _TABLE_CACHE.get(key)
     if cached is not None and cached[0] == token:

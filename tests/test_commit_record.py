@@ -32,6 +32,7 @@ from options_data_pipeline_spark.sinks.upsert import (
     upsert_partitioned,
     upsert_partitioned_moving,
 )
+from options_data_pipeline_spark.sources.tables import load_table
 
 T0 = datetime(2024, 3, 1, 20)
 _GROUPS = itertools.count()
@@ -332,8 +333,10 @@ def _partitions(t):
 def test_crash_in_partition_swap_rolls_forward(spark, tmp_path, monkeypatch, point):
     """A crash anywhere in the journaled partition swap: the next read
     rolls it forward to the table a clean run leaves, with no partition
-    missing or held twice, and the commit record is stale, not wrong."""
-    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    missing or held twice, and the commit record is stale, not wrong.
+    Every package reader rolls it forward itself: the watermark probe,
+    the table loader and the sinks' target read each see the new table."""
+    clean, crashed = str(tmp_path / "clean.parquet"), str(tmp_path / "crashed.parquet")
     for t in (clean, crashed):
         _moving(spark, t, BASE)
     _moving(spark, clean, BATCH)
@@ -361,9 +364,22 @@ def test_crash_in_partition_swap_rolls_forward(spark, tmp_path, monkeypatch, poi
     if point == "between_renames":
         assert "cell=c0" not in _partitions(crashed)  # the window the journal closes
 
-    assert _cells(_read_target(spark, crashed)) == _cells(spark.read.parquet(clean))
+    # a copy of the crashed state (the journal names its directories
+    # relative to the table's parent) for a second reader to heal
+    copy = tmp_path / "copy"
+    copy.mkdir()
+    for n in os.listdir(tmp_path):
+        if n.startswith("crashed.parquet"):
+            src = tmp_path / n
+            (shutil.copytree if src.is_dir() else shutil.copy2)(src, copy / n)
+    want = _cells(spark.read.parquet(clean))
+    assert high_watermark(spark, crashed, "k") == max(r[0] for r in want)
+    assert _cells(load_table(spark, str(copy), "crashed")) == want
+    assert not [n for n in os.listdir(copy) if n.startswith("crashed.parquet.")]
+
+    assert _cells(_read_target(spark, crashed)) == want
     assert _partitions(crashed) == _partitions(clean)
-    assert not [n for n in os.listdir(tmp_path) if n.startswith("crashed.")]
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("crashed.parquet.")]
     assert commit.read_record(crashed) is None
     # the next sink call converges and commits a current record again
     assert _moving(spark, crashed, NEXT) == _moving(spark, clean, NEXT)
@@ -371,14 +387,16 @@ def test_crash_in_partition_swap_rolls_forward(spark, tmp_path, monkeypatch, poi
     assert commit.read_record(crashed) is not None
 
 
-@pytest.mark.parametrize("heal", ["read", "backfill"])
+@pytest.mark.parametrize("heal", ["read", "backfill", "sync"])
 def test_crash_in_whole_table_swap_rolls_forward(spark, tmp_path, monkeypatch, heal):
     """The whole-table swap is journaled too: a crash after the old table
     is moved out and before the staged one is in leaves no table at the
     path, and the next read puts the new one (with its record) in place
     instead of cold-starting.  A backfill page after the crash finds the
     recovered table, not a fresh one: stored keys keep their rows (DO
-    NOTHING) and the flat table stays flat."""
+    NOTHING) and the flat table stays flat.  A sync after the crash
+    resumes from the recovered watermark minus the lookback, not from a
+    cold start."""
     keys = ["instrument", "bucket_ts"]
     clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
     for t in (clean, crashed):
@@ -407,6 +425,17 @@ def test_crash_in_whole_table_swap_rolls_forward(spark, tmp_path, monkeypatch, h
             (i, T0 + timedelta(hours=h), c)
             for i in "AB" for h, c in ((0, 1.0), (1, 10.0), (2, 11.0), (3, 8.0))
         )
+    if heal == "sync":
+        starts = []
+
+        def fetch(start, now):
+            starts.append(start)
+            return _rows(spark, [2, 3], price=4.0)
+
+        for t in (clean, crashed):
+            _sync(spark, t, fetch, 0)
+        # the watermark is hour 2; the lookback is 2 h
+        assert starts == [T0, T0]
     assert sorted(_read_target(spark, crashed).collect()) == sorted(
         spark.read.parquet(clean).collect())
     if heal == "read":

@@ -177,7 +177,7 @@ def test_pack_token_shards_equals_naive_prefix_sum(spark):
 
 
 def test_write_token_shards_layout_and_roundtrip(spark, tmp):
-    from options_data_pipeline_spark.sinks.layout import write_token_shards
+    from options_data_pipeline_spark.operators.packing import write_token_shards
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
     out = f"{tmp}/shards"

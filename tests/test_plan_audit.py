@@ -150,6 +150,25 @@ def test_interior_audit_catches_injected_shuffle(spark, tmp_path):
     assert live[2] == committed["join_ivm_twin#adjust"][2] + 1
 
 
+def test_audit_row_does_not_depend_on_execution(spark):
+    """A frame's row is the same before and after something runs it:
+    once run, the frame's own QueryExecution explains AQE's final plan
+    beside the initial one (here the shuffle and the broadcast join
+    would count twice), which the audit must not read."""
+    from pyspark.sql import functions as F
+
+    from tools.plan_audit import audit_df
+
+    facts = spark.range(0, 100_000).select(
+        (F.col("id") % 1000).alias("k"), F.col("id").alias("v"))
+    dims = spark.range(0, 100_000).select(F.col("id").alias("k")).where("k < 10")
+    df = facts.join(dims, "k").groupBy("k").agg(F.sum("v"))
+    before = audit_df(spark, "frame", df)
+    df.collect()
+    assert audit_df(spark, "frame", df) == before
+    assert before[2:4] == (1, 1)  # one shuffle, one broadcast join
+
+
 def test_audit_catches_injected_shuffle(spark):
     """Negative control: a deliberately-degraded plan (extra
     repartition) must NOT match the committed row."""

@@ -34,11 +34,16 @@ def audit_df(spark, name: str, df) -> tuple:
     count).  A materialize()d shared frame reads its source once at
     the checkpoint build and shows as Scan ExistingRDD afterwards, so
     a terminal scans=0 means "every source read happens inside one
-    materialization job", not "free"."""
+    materialization job", not "free".
+
+    The plan explained is a fresh QueryExecution over the frame's
+    logical plan (``select("*")``), not the frame's own: once a frame
+    has run, its own holds the final adaptive plan, so a row would
+    depend on whether something executed the frame before the audit."""
     explain_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    plan = df._jdf.queryExecution().explainString(explain_mode)
+    plan = df.select("*")._jdf.queryExecution().explainString(explain_mode)
     tree = [
         ln.strip() for ln in plan.splitlines() if re.match(r"^\(\d+\)", ln.strip())
     ]
